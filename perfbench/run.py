@@ -5,9 +5,10 @@
     python3 perfbench/run.py --selftest
 
 Run from the root of a source checkout. Builds the engine and the benchmark
-from source (once per source state), generates the input tables, runs one
-JVM that measures set-up, a cold pass and warm passes, checks every op's
-output, and prints the metrics; the last stdout line is one JSON object.
+from source (once per source state), runs one JVM that measures set-up, a
+cold pass and warm passes over the committed input tables
+(perfbench/fixtures), checks every op's output, and prints the metrics; the
+last stdout line is one JSON object.
 See perfbench/README.md.
 """
 import argparse
@@ -24,7 +25,6 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 SCALE = 0.01         # scale factor of the measured passes
 SELFTEST_SCALE = 0.001  # scale factor of the self-test's inputs
-DATA_SEED = 42       # the input tables are fixed; --seed permutes op order
 HEAP = "3g"
 WORKLOADS = ("tpch_analytics", "index_dedup")
 E2E = [("setup_s", "s"), ("cold_s", "s"), ("warm_s", "s"),
@@ -84,17 +84,18 @@ def build():
 
 
 def fixtures(sf):
-    """Generate the input tables once per scale and generator version."""
-    with open(os.path.join(HERE, "fixtures.py"), "rb") as fh:
-        tag = hashlib.sha256(fh.read()).hexdigest()[:12]
-    out = os.path.join(BUILD, "fixtures", f"sf{sf}-{DATA_SEED}-{tag}")
-    if not os.path.isfile(os.path.join(out, "_READY")):
-        sys.path.insert(0, HERE)
-        import fixtures as gen
-        shutil.rmtree(out, ignore_errors=True)
-        gen.generate(out, sf, DATA_SEED)
-        open(os.path.join(out, "_READY"), "w").close()
-    return out
+    """The engine's test fixtures at scale `sf`, committed verbatim under
+    perfbench/fixtures/; refuses to run on tables that differ from them."""
+    base = os.path.join(HERE, "fixtures")
+    with open(os.path.join(base, "SHA256SUMS")) as fh:
+        sums = [l.split() for l in fh]
+    for digest, name in sums:
+        if not name.startswith(f"sf{sf}/"):
+            continue
+        with open(os.path.join(base, name), "rb") as fh:
+            if hashlib.sha256(fh.read()).hexdigest() != digest:
+                sys.exit(f"perfbench: fixture {name} differs from SHA256SUMS")
+    return os.path.join(base, f"sf{sf}")
 
 
 def source_head():
@@ -119,7 +120,9 @@ def java(cp, main, args, scratch, stdout=sys.stderr):
     if any("graft." in os.environ.get(k, "") for k in launch_opts):
         sys.exit("perfbench: refusing to run with engine flags (-Dgraft.*) in the JVM options")
     env = {k: v for k, v in os.environ.items() if k not in launch_opts}
-    env["SPARK_LOCAL_DIRS"] = os.path.join(scratch, "spark-local")
+    # Spark's local dir (shuffle and spill files) lives under java.io.tmpdir,
+    # so the run's disk footprint is measured over both
+    env["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "spark-local")
     return subprocess.run(cmd, cwd=scratch, env=env, stdout=stdout).returncode
 
 

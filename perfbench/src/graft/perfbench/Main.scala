@@ -4,6 +4,8 @@ import java.io.File
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
@@ -19,9 +21,6 @@ import scala.util.control.NonFatal
   * empty directory.
   */
 object Main {
-  /** Warm passes of an untraced run at least: their median is `warm_s`. */
-  val WarmPasses = 2
-
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     val graftProps = sys.props.keys.filter(_.startsWith("graft.")).toSeq.sorted
@@ -33,14 +32,14 @@ object Main {
     val ops = Workloads.select(workload, a.get("only").flatMap(Workloads.parseOnly))
     val result = run(workload, ops, a("seed").toLong, a("seconds").toDouble, a("trace") == "1",
       a("fixtures"), a("scratch"), a.getOrElse("head", "unknown"))
-    Files.writeString(Paths.get(a("out")), Json(result))
+    Files.writeString(Paths.get(a("out")), Serialization.write(result)(DefaultFormats))
   }
 
   def loadAvg: Double = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
   /** The engine Bench's session settings, at `cores` cores. Spark's local
     * dir comes from SPARK_LOCAL_DIRS, which the launcher points into the
-    * run's scratch directory.
+    * JVM's java.io.tmpdir.
     */
   def session(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -89,8 +88,9 @@ object Main {
     // one core stays free for the driver's scheduler, listener and JIT
     // threads; with all cores busy the pass times spread twice as wide
     val cores = math.max(1, math.min(Runtime.getRuntime.availableProcessors - 1, 4))
-    // java.io.tmpdir is this run's own empty directory (set at JVM launch):
-    // the persisted stores and spills all start cold
+    // java.io.tmpdir is this run's own empty directory (set at JVM launch),
+    // holding the persisted stores and Spark's local dir: everything starts
+    // cold, and its size is the run's disk footprint
     val tmpRoot = new File(sys.props("java.io.tmpdir"))
 
     // ---- set-up: session start and the fixture footer warm-up
@@ -117,7 +117,7 @@ object Main {
     // trace mode runs untraced and traced warm passes in the order U T T U,
     // which cancels a steady drift of pass times out of the difference, so
     // one run gives both the per-layer record and the tracing overhead
-    val minWarm = if (trace) 4 else WarmPasses
+    val minWarm = if (trace) math.max(4, Workloads.warmPasses(workload)) else Workloads.warmPasses(workload)
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     var attached = trace
     while (warm.size < minWarm || System.nanoTime() < deadline) {
@@ -175,7 +175,7 @@ object Main {
         "index" -> p.index, "kind" -> p.kind, "traced" -> p.traced, "seconds" -> p.seconds,
         "wall_s" -> (p.end - p.start) / 1e3,
         "ops" -> p.ops.map(r => Map("op" -> r.op.name, "module" -> r.op.module,
-          "build_s" -> r.buildS, "run_s" -> r.runS, "rows" -> r.rows, "error" -> r.error)))),
+          "build_s" -> r.buildS, "run_s" -> r.runS, "rows" -> r.rows, "error" -> r.error.orNull)))),
       "end_to_end" -> e2e, "warm_passes" -> untracedWarm.size,
       "per_layer" -> perLayer, "traced_counts" -> tracedCounts, "spans" -> spans,
       "dumps" -> dumps)
@@ -201,7 +201,7 @@ object Main {
       }
       Map("op" -> op.name, "paths" -> written.collect { case Right(p) => p },
         "error" -> (if (!built.contains(op.name)) Some("failed in the cold pass")
-          else written.collectFirst { case Left(e) => e }))
+          else written.collectFirst { case Left(e) => e }).orNull)
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism)
     try {

@@ -23,17 +23,25 @@ object Workloads {
 
   val lists: Map[String, Seq[String]] = Map(
     // plan-only operators: SQL-style joins, aggregates, windows, ETL and
-    // word count; no beam, no ANN index, no tokenizer (one op serves from a
-    // persisted sketch store)
+    // word count; no beam, no persisted artifact, no tokenizer
     "tpch_analytics" -> Seq(
-      "tpch_q3_like", "agg_groupby_q1", "kmv_overlap_probe", "window_anomaly_zscore",
+      "tpch_q3_like", "agg_groupby_q1", "join_inner_shuffle", "window_anomaly_zscore",
       "project_expr", "etl_scd2", "stream_session_windows", "text_wordcount"),
-    // work done while a query is built: persisted ANN indexes and the graph
-    // beam, memoized clustering and label propagation, tokenizer training,
-    // and native per-row text and media expressions
+    // work done while a query is built: persisted ANN indexes, sketch and
+    // tokenizer stores, the graph beam and retrieval fusion over them,
+    // memoized clustering and label propagation, tokenizer training, and
+    // native per-row text and media expressions
     "index_dedup" -> Seq(
-      "sim_ann_graph_search", "sim_ann_ivfpq_probe", "dedup_cluster_cc",
-      "graph_connected_components", "text_unigram_encode", "mm_decode_features"))
+      "sim_ann_graph_search", "sim_ann_ivfpq_probe", "kmv_overlap_probe",
+      "retrieval_rrf_fusion_ann", "dedup_cluster_cc", "graph_connected_components",
+      "text_bpe_encode", "text_unigram_encode", "text_unigram_encode_frozen",
+      "mm_decode_features"))
+
+  /** Warm passes of an untraced run at least: their median is `warm_s`. A
+    * `tpch_analytics` pass is a few seconds of sub-second jobs, so it takes
+    * more passes for a steady median.
+    */
+  def warmPasses(workload: String): Int = if (workload == "tpch_analytics") 5 else 2
 
   /** The owning layer of a query name; fails loudly for a name no layer owns. */
   def op(name: String): Op = layers.collectFirst {
