@@ -34,19 +34,13 @@ object AnnIndex {
     */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def indexRoot(d: String): String = {
-    // keyed by fixture fingerprint AND index geometry: a PqM/nprobe/K
-    // retune is a different index — without the geometry term a persisted
-    // index from an older build would serve stale codebooks to the
-    // frozen-codebook append path (caught in round 10 when M went 16→32)
-    // 64-bit fingerprint fold (ADVICE r16 — see KmvStore.storeRoot)
-    val key = Sources.fixtureKey(d, "embeddings") + ":" + Similarity.pqGeometryTag
-    val safe = Sources.stableHex64(key)
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_ann_index/${new java.io.File(d).getName}_$safe"
-  }
-
-  private def marker(root: String) = new java.io.File(root, "_INDEX_OK")
+  /** Keyed by fixture fingerprint AND index geometry: a PqM/nprobe/K
+    * retune is a different index — without the geometry term a persisted
+    * index from an older build would serve stale codebooks to the
+    * frozen-codebook append path (caught in round 10 when M went 16→32).
+    */
+  def indexRoot(d: String): String =
+    Artifact.root("ann_index", d, "embeddings")(Similarity.pqGeometryTag)
 
   /** Delta staging dir under the index root. The delta CONTENT depends on
     * the IncrCut dials (the root folds only the PQ geometry), so the cut
@@ -71,33 +65,27 @@ object AnnIndex {
     * if this call had to build it.
     */
   def ensure(s: SparkSession, d: String): Boolean =
-    if (marker(indexRoot(d)).isFile) true else { build(s, d).count(); false }
+    Artifact.ensure(indexRoot(d), "_INDEX_OK")(build(s, d).count())
 
   /** True if the delta staging artifacts already existed. */
   def ensureAppend(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(deltaDir(indexRoot(d)), "_DELTA_OK").isFile) true
-    else { append(s, d).count(); false }
+    Artifact.ensure(deltaDir(indexRoot(d)), "_DELTA_OK")(append(s, d).count())
 
   /** True if the tombstone artifact already existed. */
   def ensureTomb(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(tombDir(indexRoot(d)), "_TOMB_OK").isFile) true
-    else { delete(s, d).count(); false }
+    Artifact.ensure(tombDir(indexRoot(d)), "_TOMB_OK")(delete(s, d).count())
 
-  /** True if the compacted artifacts already existed. */
-  def ensureAppend2(s: SparkSession, d: String): Boolean = {
-    // BOTH markers: compact() deletes _COMPACT_OK before overwriting the
-    // compacted base, so a crash mid-rebuild leaves torn cd/codes+lists
-    // under an intact _DELTA2_OK — the mergedFrames two-marker contract
-    // applies one generation later (code-review, this session)
-    val cd = compactDir(indexRoot(d))
-    if (new java.io.File(cd, "_COMPACT_OK").isFile &&
-        new java.io.File(cd, "_DELTA2_OK").isFile) true
-    else { append2(s, d).count(); false }
-  }
+  /** True if the compacted artifacts already existed. BOTH markers:
+    * compact() deletes _COMPACT_OK before overwriting the compacted base,
+    * so a crash mid-rebuild leaves torn cd/codes+lists under an intact
+    * _DELTA2_OK — the mergedFrames two-marker contract one generation later.
+    */
+  def ensureAppend2(s: SparkSession, d: String): Boolean =
+    Artifact.ensure(compactDir(indexRoot(d)), "_COMPACT_OK", "_DELTA2_OK")(
+      append2(s, d).count())
 
   def ensureCompact(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(compactDir(indexRoot(d)), "_COMPACT_OK").isFile) true
-    else { compact(s, d).count(); false }
+    Artifact.ensure(compactDir(indexRoot(d)), "_COMPACT_OK")(compact(s, d).count())
 
   /** Build (or rebuild) the persisted index from the deterministic
     * training pipeline and return the per-list summary (cid, n_vectors).
@@ -114,18 +102,16 @@ object AnnIndex {
     val ow = org.apache.spark.sql.SaveMode.Overwrite
     val (centroidRows, listsPath) = Similarity.ivfPqCoarseIndex(s, d)
     val (cbRows, codesPath) = Similarity.pqIndex(s, d)
-    marker(root).delete()
-    centroidRows.zipWithIndex.map { case (v, i) => (i + 1, v) }
-      .toDF("cid", "ce").coalesce(1)
-      .write.mode(ow).parquet(s"$root/coarse_centroids")
-    cbRows.toDF("m", "code", "cw").coalesce(1)
-      .write.mode(ow).parquet(s"$root/codebooks")
-    s.read.parquet(codesPath).write.mode(ow).parquet(s"$root/codes")
-    s.read.parquet(listsPath).write.mode(ow)
-      .partitionBy("cid").parquet(s"$root/lists")
-    val ok = marker(root)
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_INDEX_OK") {
+      centroidRows.zipWithIndex.map { case (v, i) => (i + 1, v) }
+        .toDF("cid", "ce").coalesce(1)
+        .write.mode(ow).parquet(s"$root/coarse_centroids")
+      cbRows.toDF("m", "code", "cw").coalesce(1)
+        .write.mode(ow).parquet(s"$root/codebooks")
+      s.read.parquet(codesPath).write.mode(ow).parquet(s"$root/codes")
+      s.read.parquet(listsPath).write.mode(ow)
+        .partitionBy("cid").parquet(s"$root/lists")
+    }
     summary(s, root)
   }
 
@@ -311,8 +297,7 @@ object AnnIndex {
   def append(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
     val dd = deltaDir(indexRoot(d))
-    ingestBatch(s, d, deltaFrame(s, d), s"$dd/codes", s"$dd/lists",
-      new java.io.File(dd, "_DELTA_OK"))
+    ingestBatch(s, d, deltaFrame(s, d), s"$dd/codes", s"$dd/lists", dd, "_DELTA_OK")
   }
 
   /** The arrival-order delta slice (the IncrCut contract) — the ONE
@@ -345,7 +330,7 @@ object AnnIndex {
     * last; audit = per-list appended occupancy + integer code checksum.
     */
   private def ingestBatch(s: SparkSession, d: String, batch: DataFrame,
-      codesPath: String, listsPath: String, okf: java.io.File): DataFrame = {
+      codesPath: String, listsPath: String, dir: String, marker: String): DataFrame = {
     import org.apache.spark.sql.graft.VectorOps.vec_argmin_dist
     import s.implicits._
     val root = indexRoot(d)
@@ -370,10 +355,10 @@ object AnnIndex {
       .join(cbByM, Seq("m"))
       .select(col("vec_id"), col("m"),
         element_at(col("codes"), vec_argmin_dist(col("sub"), col("cws"))).as("code"))
-    okf.delete()
-    codes.write.mode(ow).parquet(codesPath)
-    assigned.write.mode(ow).partitionBy("cid").parquet(listsPath)
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(dir, marker) {
+      codes.write.mode(ow).parquet(codesPath)
+      assigned.write.mode(ow).partitionBy("cid").parquet(listsPath)
+    }
     ingestAudit(s.read.parquet(listsPath), s.read.parquet(codesPath))
   }
 
@@ -403,7 +388,7 @@ object AnnIndex {
       batchId: Long): Unit = {
     val sd = streamDir(indexRoot(d))
     ingestBatch(s, d, batch, s"$sd/codes_sb$batchId", s"$sd/lists_sb$batchId",
-      new java.io.File(sd, s"_SSEG${batchId}_OK")).count()
+      sd, s"_SSEG${batchId}_OK").count()
   }
 
   /** The GATE form of streaming ingest: the append delta arrives as
@@ -425,8 +410,7 @@ object AnnIndex {
     // serial job floors overlapped
     Sources.concurrently(0 until StreamIngestBatches) { b =>
       ingestBatch(s, d, delta.where(pmod(col("vec_id"), lit(StreamIngestBatches.toLong)) === b),
-        s"$sd/codes_b$b", s"$sd/lists_b$b",
-        new java.io.File(sd, s"_SEG${b}_OK")).count()
+        s"$sd/codes_b$b", s"$sd/lists_b$b", sd, s"_SEG${b}_OK").count()
     }
     // segment readers REQUIRE the markers (ADVICE r19: a write-only
     // marker is a dead contract): the union must never serve a torn
@@ -435,7 +419,7 @@ object AnnIndex {
     // (AnnIndexSpec pins it) — but any future consumer that reads
     // segments WITHOUT re-ingesting inherits the check, not the trap.
     val torn = (0 until StreamIngestBatches)
-      .filterNot(b => new java.io.File(sd, s"_SEG${b}_OK").isFile)
+      .filterNot(b => Artifact.ready(sd, s"_SEG${b}_OK"))
     require(torn.isEmpty, s"torn stream segments (no marker): $torn")
     ingestAudit(
       (0 until StreamIngestBatches)
@@ -457,15 +441,14 @@ object AnnIndex {
   def delete(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
     val td = tombDir(indexRoot(d))
-    val okf = new java.io.File(td, "_TOMB_OK")
-    okf.delete()
-    val mx = Tables.embeddings(s, d).agg(max(col("vec_id")).as("mx"))
-    Tables.embeddings(s, d).crossJoin(broadcast(mx))
-      .where(col("vec_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
-             col("vec_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
-      .select("vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(td, "_TOMB_OK") {
+      val mx = Tables.embeddings(s, d).agg(max(col("vec_id")).as("mx"))
+      Tables.embeddings(s, d).crossJoin(broadcast(mx))
+        .where(col("vec_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
+               col("vec_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
+        .select("vec_id")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
+    }
     s.read.parquet(s"$td/ids")
       .agg(count(lit(1)).as("n_tombstoned"), sum(col("vec_id")).as("id_sum"))
   }
@@ -477,7 +460,7 @@ object AnnIndex {
     */
   private def baseCut(mx: DataFrame, df: DataFrame): DataFrame =
     df.crossJoin(mx)
-      .where(col("vec_id") * Similarity.IncrCutDen <= col("mx") * Similarity.IncrCutNum)
+      .where(Similarity.incrIsBase(col("vec_id"), col("mx")))
       .drop("mx")
 
   /** Merged serving frames: base-slice rows from the full artifacts ∪ the
@@ -549,15 +532,14 @@ object AnnIndex {
     val root = indexRoot(d)
     val ow = org.apache.spark.sql.SaveMode.Overwrite
     val cd = compactDir(root)
-    val okf = new java.io.File(cd, "_COMPACT_OK")
-    okf.delete()
-    val tombs = s.read.parquet(s"${tombDir(root)}/ids")
-    val (lists, codes) = mergedFrames(s, d)
-    codes.join(tombs, Seq("vec_id"), "left_anti")
-      .write.mode(ow).parquet(s"$cd/codes")
-    lists.join(tombs, Seq("vec_id"), "left_anti")
-      .write.mode(ow).partitionBy("cid").parquet(s"$cd/lists")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(cd, "_COMPACT_OK") {
+      val tombs = s.read.parquet(s"${tombDir(root)}/ids")
+      val (lists, codes) = mergedFrames(s, d)
+      codes.join(tombs, Seq("vec_id"), "left_anti")
+        .write.mode(ow).parquet(s"$cd/codes")
+      lists.join(tombs, Seq("vec_id"), "left_anti")
+        .write.mode(ow).partitionBy("cid").parquet(s"$cd/lists")
+    }
     s.read.parquet(s"$cd/lists")
       .join(s.read.parquet(s"$cd/codes"), Seq("vec_id"))
       .groupBy("cid")
@@ -620,8 +602,7 @@ object AnnIndex {
     ensureCompact(s, d)
     val cd = compactDir(indexRoot(d))
     ingestBatch(s, d, Similarity.delCutSlice(s, d),
-      s"$cd/codes_delta2", s"$cd/lists_delta2",
-      new java.io.File(cd, "_DELTA2_OK"))
+      s"$cd/codes_delta2", s"$cd/lists_delta2", cd, "_DELTA2_OK")
   }
 
   /** Probe over compacted ∪ gen-2 staging. Compacted = (base ∪ delta) −

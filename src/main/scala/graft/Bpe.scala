@@ -166,15 +166,6 @@ object Bpe {
     out.toSeq
   }
 
-  /** One learned artifact per (process, fixture): merge table + final
-    * word-symbol frame, parquet-spilled. Keyed by the documents fixture
-    * fingerprint so an in-place rewrite invalidates the memo (the
-    * triSpill/edgeSpill convention).
-    */
-  private val bpeSpill =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-  Sources.onSpillEvict(() => bpeSpill.clear())
-
   private[graft] def wordFreq(corpus: DataFrame): DataFrame =
     corpus
       .select(explode(split(col("text"), " ")).as("word"))
@@ -408,14 +399,21 @@ object Bpe {
     * — bit-identical results, zero per-round jobs); `-Dgraft.bpe.forceLoop`
     * restores the distributed loop for specs and octaves, under a
     * DISTINCT spill key so the forced run actually executes (a shared key
-    * would hand the spec the other regime's cached artifact).
+    * would hand the spec the other regime's cached artifact). One learned
+    * artifact per (process, key): merge table + final word-symbol frame,
+    * parquet-spilled; the key carries the documents fixture fingerprint so
+    * an in-place rewrite invalidates the memo.
     */
   private[graft] def learnLoopWf(s: SparkSession, wf0: DataFrame, key0: String,
       nMerges: Int, batchK: Int): (String, String, String) = {
     val forceLoop = java.lang.Boolean.getBoolean("graft.bpe.forceLoop")
     val key = if (forceLoop) key0 + ":loop" else key0
-    val cached = bpeSpill.get(key)
-    if (cached != null) return cached
+    Artifact.memo("bpe_learn", key)(learnSpills(s, wf0, key, forceLoop, nMerges, batchK))
+  }
+
+  /** The learn behind [[learnLoopWf]]: (merges, final syms, word-freq) spill paths. */
+  private def learnSpills(s: SparkSession, wf0: DataFrame, key: String,
+      forceLoop: Boolean, nMerges: Int, batchK: Int): (String, String, String) = {
     val wfPath = Sources.tmpUnique("bpe_wf")
     wf0.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(wfPath)
     if (!forceLoop) {
@@ -433,9 +431,7 @@ object Bpe {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(symsPath)
         System.err.println(
           s"[bpe] $key: ${merges.length} merges driver-side ($nTypes types)")
-        val built = (mergesPath, symsPath, wfPath)
-        val prev = bpeSpill.putIfAbsent(key, built)
-        return if (prev != null) prev else built
+        return (mergesPath, symsPath, wfPath)
       }
     }
     val wf = s.read.parquet(wfPath)
@@ -518,9 +514,7 @@ object Bpe {
     import s.implicits._
     merges.toSeq.toDF("rank", "s1", "s2", "pair_count")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(mergesPath)
-    val built = (mergesPath, symsPath, wfPath)
-    val prev = bpeSpill.putIfAbsent(key, built)
-    if (prev != null) prev else built
+    (mergesPath, symsPath, wfPath)
   }
 
   /** The learned merge table: (rank, s1, s2, merged, pair_count). */

@@ -73,19 +73,6 @@ object Graph {
     symEdges(s, d).withColumn("deg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
 
-  /** One edge spill per (process, dataset dir): repeated pagerank
-    * constructions — including plan-only inspection (PlanRegressionSpec,
-    * Explain) and Bench's min-of-2 rerun — reuse the first write instead of
-    * accumulating a fresh tmpUnique dir each time (ADVICE.md round 5). The
-    * fixtures under a dir are immutable for the life of the process, so
-    * reuse is safe; computeIfAbsent serializes the one write. Cleaned with
-    * the per-process tmp dir at JVM exit.
-    */
-  private val edgeSpill = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // both path caches clear on the opt-in spill eviction (VERDICT r10 #8)
-  Sources.onSpillEvict(() => { edgeSpill.clear(); triSpill.clear() })
-
   def pagerank(s: SparkSession, d: String): DataFrame = {
     // The edge list is referenced once per iteration plus once for the
     // rank seed — spill it to parquet ONCE and read it back, so the
@@ -94,14 +81,14 @@ object Graph {
     // either leak past the query or, unpersisted before the action, drop
     // the blocks the plan still needs — the exact trap labelPropagate's
     // spill-every-3-rounds avoids). The write runs eagerly at construction
-    // time, same contract as the Etl sink operators.
-    val path = edgeSpill.computeIfAbsent(d, _ => {
-      val p = Sources.tmpUnique("pr_edges")
-      edgesWithDeg(s, d).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-      p
-    })
-    val edges = s.read.parquet(path)
+    // time, same contract as the Etl sink operators. One spill per (process,
+    // orders+lineitem fingerprint): repeated constructions — plan-only
+    // inspection, Bench's reruns — reuse the first write (ADVICE.md round
+    // 5), and a fixture rewritten in place rebuilds instead of serving
+    // stale edges (ADVICE r7).
+    val edges = Sources.memoSpill(s,
+        Sources.fixtureKey(d, "orders") + "+" + Sources.fixtureKey(d, "lineitem"),
+        "pr_edges")(edgesWithDeg(s, d))
     var ranks = edges.select(col("src").as("node")).distinct()
       .withColumn("pr", lit(1000000L))
     for (_ <- 1 to Iterations) {
@@ -153,35 +140,17 @@ object Graph {
     * ~zero wedges as a dst, not 10^12 as a middle). The spill (pagerank's
     * pattern) is read three times by the triangle join — materializing the
     * thresholded edge list beats recomputing the lineitem self-join per
-    * reference.
+    * reference. Fingerprint-keyed (ADVICE r7): a lineitem fixture rewritten
+    * in place invalidates the memo instead of serving stale edges.
     */
-  private val triSpill = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def orientedCoEdges(s: SparkSession, d: String): DataFrame =
+    Sources.memoSpill(s, Sources.fixtureKey(d, "lineitem"), "tri_edges")(
+      orientedCoEdgeFrame(s, d))
 
-  private[graft] def orientedCoEdges(s: SparkSession, d: String): DataFrame = {
-    // Build OUTSIDE any map lock (ADVICE.md round 6): computeIfAbsent would
-    // hold the bin lock for the whole Spark job, blocking an unrelated
-    // dataset's first call that hashes to the same bin, and an exception
-    // mid-write would still leave a partial temp dir. putIfAbsent after the
-    // finished write keeps the map lock-free; two concurrent first calls
-    // may each build once (both writes are complete, self-consistent dirs —
-    // the loser's is simply never read again), which is the standard
-    // race-tolerant memoization trade.
-    // fingerprint-keyed (ADVICE r7): a lineitem fixture rewritten in place
-    // invalidates the memo instead of serving stale edges
-    val key = Sources.fixtureKey(d, "lineitem")
-    val cached = triSpill.get(key)
-    val path = if (cached != null) cached else {
-      val built = buildOrientedCoEdges(s, d)
-      val prev = triSpill.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-    s.read.parquet(path)
-  }
-
-  /** Runs the thresholded co-purchase self-join and spills the oriented
-    * edge list; returns the parquet path. See [[orientedCoEdges]].
+  /** The thresholded co-purchase self-join as the oriented edge list. See
+    * [[orientedCoEdges]].
     */
-  private def buildOrientedCoEdges(s: SparkSession, d: String): String = {
+  private def orientedCoEdgeFrame(s: SparkSession, d: String): DataFrame = {
     val cs = lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
     val e = cs.as("a").join(cs.as("b"),
@@ -195,16 +164,12 @@ object Graph {
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val lower = col("d1.deg") < col("d2.deg") ||
       (col("d1.deg") === col("d2.deg") && col("p1") < col("p2"))
-    val oriented = e
-      .join(deg.as("d1"), col("p1") === col("d1.node"))
+    e.join(deg.as("d1"), col("p1") === col("d1.node"))
       .join(deg.as("d2"), col("p2") === col("d2.node"))
       .select(
         when(lower, col("p1")).otherwise(col("p2")).as("src"),
         when(lower, col("p2")).otherwise(col("p1")).as("dst"),
         when(lower, col("d2.deg")).otherwise(col("d1.deg")).as("ddeg"))
-    val p = Sources.tmpUnique("tri_edges")
-    oriented.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    p
   }
 
   val queries: Map[String, Q] = Map(

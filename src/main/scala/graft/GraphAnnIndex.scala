@@ -88,43 +88,32 @@ object GraphAnnIndex {
   private[graft] val baseBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] val compactBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def indexRoot(d: String): String = {
-    // EVERY geometry dial in the key, init offsets included (code-review
-    // r17: an offsets retune with rounds/K/ρK fixed would otherwise serve
-    // a stale persisted graph — the pqGeometryTag precedent folds all
-    // constants)
-    val key = Sources.fixtureKey(d, "embeddings") +
-      s":gann:${Similarity.NndRounds}:${Similarity.NndBuildK}:${Similarity.NndSampleK}" +
-      s":${Similarity.NndInitOffsets.mkString(",")}"
-    val safe = Sources.stableHex64(key)
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_gann_index/${new java.io.File(d).getName}_$safe"
-  }
-
-  private def marker(root: String) = new java.io.File(root, "_GANN_OK")
+  /** EVERY geometry dial in the key, init offsets included (code-review
+    * r17: an offsets retune with rounds/K/ρK fixed would otherwise serve a
+    * stale persisted graph — the pqGeometryTag precedent folds all
+    * constants).
+    */
+  def indexRoot(d: String): String =
+    Artifact.root("gann_index", d, "embeddings")("gann", Similarity.NndRounds,
+      Similarity.NndBuildK, Similarity.NndSampleK, Similarity.NndInitOffsets.mkString(","))
 
   /** Root of the BASE-slice graph (vec_id·IncrCutDen ≤ mx·IncrCutNum —
     * the standing corpus the incremental-ingest story appends to); the
     * cut constants join the geometry dials in the key.
     */
-  def baseRoot(d: String): String = {
-    val key = Sources.fixtureKey(d, "embeddings") +
-      s":gannbase:${Similarity.NndRounds}:${Similarity.NndBuildK}:${Similarity.NndSampleK}" +
-      s":${Similarity.NndInitOffsets.mkString(",")}" +
-      s":${Similarity.IncrCutNum}/${Similarity.IncrCutDen}"
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_gann_index/${new java.io.File(d).getName}_base_${Sources.stableHex64(key)}"
-  }
+  def baseRoot(d: String): String =
+    Artifact.root("gann_index", d, "embeddings", "base")("gannbase", Similarity.NndRounds,
+      Similarity.NndBuildK, Similarity.NndSampleK, Similarity.NndInitOffsets.mkString(","),
+      s"${Similarity.IncrCutNum}/${Similarity.IncrCutDen}")
 
   def ensureBase(s: SparkSession, d: String): Boolean =
-    if (marker(baseRoot(d)).isFile) true else { buildBase(s, d).count(); false }
+    Artifact.ensure(baseRoot(d), "_GANN_OK")(buildBase(s, d).count())
 
   /** Appended-delta staging artifacts under [[baseRoot]] (which already
     * folds the IncrCut dials, so untagged names cannot go stale there).
     */
   def ensureAppend(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(baseRoot(d), "_GANN_DELTA_OK").isFile) true
-    else { appendGraph(s, d).count(); false }
+    Artifact.ensure(baseRoot(d), "_GANN_DELTA_OK")(appendGraph(s, d).count())
 
   /** Tombstone dir under [[baseRoot]] — the delete RULE shapes the
     * content, so its dials ride the directory name (the persisted-store
@@ -137,23 +126,19 @@ object GraphAnnIndex {
     s"$root/compacted_${Similarity.delTag}"
 
   def ensureTomb(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(tombDir(baseRoot(d)), "_TOMB_OK").isFile) true
-    else { delete(s, d).count(); false }
+    Artifact.ensure(tombDir(baseRoot(d)), "_TOMB_OK")(delete(s, d).count())
 
   def ensureCompact(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(compactDir(baseRoot(d)), "_GANN_COMPACT_OK").isFile) true
-    else { compact(s, d).count(); false }
+    Artifact.ensure(compactDir(baseRoot(d)), "_GANN_COMPACT_OK")(compact(s, d).count())
 
-  def ensureAppend2(s: SparkSession, d: String): Boolean = {
-    // BOTH markers (the mergedFrames crashed-build contract one
-    // generation later): compact() overwrites cd/vectors+lists after
-    // deleting _GANN_COMPACT_OK, so _GANN_DELTA2_OK alone can sit over a
-    // torn compacted graph (code-review, this session)
-    val cd = compactDir(baseRoot(d))
-    if (new java.io.File(cd, "_GANN_COMPACT_OK").isFile &&
-        new java.io.File(cd, "_GANN_DELTA2_OK").isFile) true
-    else { appendGen2(s, d).count(); false }
-  }
+  /** BOTH markers (the mergedFrames crashed-build contract one generation
+    * later): compact() overwrites cd/vectors+lists after deleting
+    * _GANN_COMPACT_OK, so _GANN_DELTA2_OK alone can sit over a torn
+    * compacted graph.
+    */
+  def ensureAppend2(s: SparkSession, d: String): Boolean =
+    Artifact.ensure(compactDir(baseRoot(d)), "_GANN_COMPACT_OK", "_GANN_DELTA2_OK")(
+      appendGen2(s, d).count())
 
   /** Build the base-slice index: the SAME NN-descent pipeline over the
     * base vectors only (ids 0..C−1 stay contiguous because the delta is
@@ -165,23 +150,18 @@ object GraphAnnIndex {
     baseBuilds.incrementAndGet()
     val root = baseRoot(d)
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    marker(root).delete()
-    val emb = Tables.embeddings(s, d)
-    val mx = emb.agg(max(col("vec_id")).as("mx"))
-    // vectors FIRST, descent from the written artifact: one embeddings
-    // scan + cut pass total (third review pass: the previous shape
-    // re-derived the slice for each artifact), and the lists provably
-    // build from the exact vectors the probe will read
-    emb.crossJoin(broadcast(mx))
-      .where(col("vec_id") * Similarity.IncrCutDen <= col("mx") * Similarity.IncrCutNum)
-      .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
-      .write.mode(ow).parquet(s"$root/vectors")
-    Similarity.nndGraphFrameOf(s, d, Similarity.NndRounds, ":base",
-        s.read.parquet(s"$root/vectors").select("vec_id", "embedding"))
-      .write.mode(ow).parquet(s"$root/lists")
-    val ok = marker(root)
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_GANN_OK") {
+      // vectors FIRST, descent from the written artifact: one embeddings
+      // scan + cut pass total (third review pass: the previous shape
+      // re-derived the slice for each artifact), and the lists provably
+      // build from the exact vectors the probe will read
+      Similarity.embCutSlice(s, d, Similarity.incrIsBase)
+        .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
+        .write.mode(ow).parquet(s"$root/vectors")
+      Similarity.nndGraphFrameOf(s, d, Similarity.NndRounds, ":base",
+          s.read.parquet(s"$root/vectors").select("vec_id", "embedding"))
+        .write.mode(ow).parquet(s"$root/lists")
+    }
     summary(s, root)
   }
 
@@ -206,8 +186,7 @@ object GraphAnnIndex {
     val root = baseRoot(d)
     ingestBeamFrom(s, deltaFrame(s, d),
       s"$root/lists", s"$root/vectors",
-      s"$root/vectors_delta", s"$root/lists_delta",
-      new java.io.File(root, "_GANN_DELTA_OK"))
+      s"$root/vectors_delta", s"$root/lists_delta", root, "_GANN_DELTA_OK")
   }
 
   /** The arrival-order delta slice — the ONE shared derivation
@@ -229,9 +208,9 @@ object GraphAnnIndex {
   private def ingestBeam(s: SparkSession, d: String,
       cut: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
       baseListsPath: String, baseVecsPath: String,
-      vecsPath: String, listsPath: String, okf: java.io.File): DataFrame =
+      vecsPath: String, listsPath: String, dir: String, marker: String): DataFrame =
     ingestBeamFrom(s, Similarity.embCutSlice(s, d, cut),
-      baseListsPath, baseVecsPath, vecsPath, listsPath, okf)
+      baseListsPath, baseVecsPath, vecsPath, listsPath, dir, marker)
 
   /** [[ingestBeam]] over a caller-supplied (vec_id, embedding) batch — the
     * streaming micro-batch ingest feeds foreachBatch frames through the
@@ -239,31 +218,31 @@ object GraphAnnIndex {
     */
   private def ingestBeamFrom(s: SparkSession, batch: DataFrame,
       baseListsPath: String, baseVecsPath: String,
-      vecsPath: String, listsPath: String, okf: java.io.File,
+      vecsPath: String, listsPath: String, dir: String, marker: String,
       manageEdgeCache: Boolean = true,
       edges: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.graft.VectorOps.vec_norm
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    okf.delete()
-    batch
-      .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
-      .write.mode(ow).parquet(vecsPath)
-    val delta = s.read.parquet(vecsPath)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-    beamLoop(s,
-        s.read.parquet(baseListsPath), s.read.parquet(baseVecsPath),
-        delta, NovelBeamRounds, broadcastQ = false,
-        manageEdgeCache = manageEdgeCache,
-        entryHint = footerMinVecId(s, Seq(baseVecsPath)),
-        edgesIn = edges)
-      // the connect step's ranking is exactly the stored state rank
-      // (row_number over qid by cs DESC, nb ASC — no filter in between),
-      // so the top-NndBuildK cut is a pushed-down filter, not a second
-      // window over the delta-sized visited state (beamLoop, r21)
-      .where(col("rn") <= Similarity.NndBuildK)
-      .select(col("qid").as("vec_id"), col("rn").cast("int").as("rn"), col("nb"))
-      .write.mode(ow).parquet(listsPath)
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(dir, marker) {
+      batch
+        .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
+        .write.mode(ow).parquet(vecsPath)
+      val delta = s.read.parquet(vecsPath)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
+      beamLoop(s,
+          s.read.parquet(baseListsPath), s.read.parquet(baseVecsPath),
+          delta, NovelBeamRounds, broadcastQ = false,
+          manageEdgeCache = manageEdgeCache,
+          entryHint = footerMinVecId(s, Seq(baseVecsPath)),
+          edgesIn = edges)
+        // the connect step's ranking is exactly the stored state rank
+        // (row_number over qid by cs DESC, nb ASC — no filter in between),
+        // so the top-NndBuildK cut is a pushed-down filter, not a second
+        // window over the delta-sized visited state (beamLoop, r21)
+        .where(col("rn") <= Similarity.NndBuildK)
+        .select(col("qid").as("vec_id"), col("rn").cast("int").as("rn"), col("nb"))
+        .write.mode(ow).parquet(listsPath)
+    }
     s.read.parquet(listsPath).orderBy("vec_id", "rn")
   }
 
@@ -354,8 +333,7 @@ object GraphAnnIndex {
     val root = baseRoot(d)
     val sd = streamDir(root)
     ingestBeamFrom(s, batch, s"$root/lists", s"$root/vectors",
-      s"$sd/vectors_sb$batchId", s"$sd/lists_sb$batchId",
-      new java.io.File(sd, s"_SSEG${batchId}_OK")).count()
+      s"$sd/vectors_sb$batchId", s"$sd/lists_sb$batchId", sd, s"_SSEG${batchId}_OK").count()
   }
 
   /** The GATE form of streaming graph ingest (the IVF-PQ family's
@@ -394,16 +372,14 @@ object GraphAnnIndex {
       Sources.concurrently(0 until nb) { b =>
         ingestBeamFrom(s, delta.where(pmod(col("vec_id"), lit(nb.toLong)) === b),
           s"$root/lists", s"$root/vectors",
-          s"$sd/vectors_b$b", s"$sd/lists_b$b",
-          new java.io.File(sd, s"_SEG${b}_OK"), manageEdgeCache = false,
+          s"$sd/vectors_b$b", s"$sd/lists_b$b", sd, s"_SEG${b}_OK", manageEdgeCache = false,
           edges = Some(shared)).count()
       }
     } finally shared.unpersist(blocking = false)
     // union readers require the segment markers — the AnnIndex.streamIngest
     // contract (ADVICE r19); unreachable here (all segments just re-beamed)
     // but inherited by any consumer that reads without re-ingesting
-    val torn = (0 until nb)
-      .filterNot(b => new java.io.File(sd, s"_SEG${b}_OK").isFile)
+    val torn = (0 until nb).filterNot(b => Artifact.ready(sd, s"_SEG${b}_OK"))
     require(torn.isEmpty, s"torn stream segments (no marker): $torn")
     (0 until nb).map(b => s.read.parquet(s"$sd/lists_b$b"))
       .reduce(_ unionByName _)
@@ -432,8 +408,7 @@ object GraphAnnIndex {
       (vid, mx) => vid * Similarity.DelCutDen > mx * Similarity.DelCutLoNum &&
         vid * Similarity.DelCutDen <= mx * Similarity.DelCutHiNum,
       s"$cd/lists", s"$cd/vectors",
-      s"$cd/vectors_delta2", s"$cd/lists_delta2",
-      new java.io.File(cd, "_GANN_DELTA2_OK"))
+      s"$cd/vectors_delta2", s"$cd/lists_delta2", cd, "_GANN_DELTA2_OK")
   }
 
   /** Serving over the generation-2 view: compacted lists ∪ delta2 lists ∪
@@ -457,7 +432,7 @@ object GraphAnnIndex {
 
   /** True if the persisted index already existed (probe-only path). */
   def ensure(s: SparkSession, d: String): Boolean =
-    if (marker(indexRoot(d)).isFile) true else { build(s, d).count(); false }
+    Artifact.ensure(indexRoot(d), "_GANN_OK")(build(s, d).count())
 
   /** Build (or rebuild) the index from the NN-descent pipeline — the SAME
     * memoized frame sim_ann_graph_nnd reads, so the persisted lists are
@@ -472,15 +447,13 @@ object GraphAnnIndex {
     builds.incrementAndGet()
     val root = indexRoot(d)
     val ow = org.apache.spark.sql.SaveMode.Overwrite
-    marker(root).delete()
-    Similarity.nndGraphFrame(s, d, Similarity.NndRounds)
-      .write.mode(ow).parquet(s"$root/lists")
-    Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
-      .write.mode(ow).parquet(s"$root/vectors")
-    val ok = marker(root)
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_GANN_OK") {
+      Similarity.nndGraphFrame(s, d, Similarity.NndRounds)
+        .write.mode(ow).parquet(s"$root/lists")
+      Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"), vec_norm(col("embedding")).as("nrm"))
+        .write.mode(ow).parquet(s"$root/vectors")
+    }
     summary(s, root)
   }
 
@@ -654,16 +627,15 @@ object GraphAnnIndex {
   def delete(s: SparkSession, d: String): DataFrame = {
     ensureBase(s, d)
     val td = tombDir(baseRoot(d))
-    val okf = new java.io.File(td, "_TOMB_OK")
-    okf.delete()
-    val emb = Tables.embeddings(s, d)
-    val mx = emb.agg(max(col("vec_id")).as("mx"))
-    emb.crossJoin(broadcast(mx))
-      .where(col("vec_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
-             col("vec_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
-      .select("vec_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(td, "_TOMB_OK") {
+      val emb = Tables.embeddings(s, d)
+      val mx = emb.agg(max(col("vec_id")).as("mx"))
+      emb.crossJoin(broadcast(mx))
+        .where(col("vec_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
+               col("vec_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
+        .select("vec_id")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
+    }
     s.read.parquet(s"$td/ids")
       .agg(count(lit(1)).as("n_tombstoned"), sum(col("vec_id")).as("id_sum"))
   }
@@ -774,28 +746,26 @@ object GraphAnnIndex {
     val root = baseRoot(d)
     val ow = org.apache.spark.sql.SaveMode.Overwrite
     val cd = compactDir(root)
-    val okf = new java.io.File(cd, "_GANN_COMPACT_OK")
-    okf.delete()
-    val tombs = s.read.parquet(s"${tombDir(root)}/ids")
-    val (lists, vecs) = mergedFrames(s, d)
-    val vecsC = vecs.join(tombs, Seq("vec_id"), "left_anti")
-    vecsC.write.mode(ow).parquet(s"$cd/vectors")
-    val cv = s.read.parquet(s"$cd/vectors")
-    val ce = lists.distinct()
-      .join(tombs, Seq("vec_id"), "left_anti")
-      .join(tombs.withColumnRenamed("vec_id", "nb"), Seq("nb"), "left_anti")
-    ce.join(cv.select(col("vec_id"), col("embedding").as("ae"), col("nrm").as("an")),
-        Seq("vec_id"))
-      .join(cv.select(col("vec_id").as("nb"), col("embedding").as("be"),
-        col("nrm").as("bn")), Seq("nb"))
-      .select(col("vec_id"), col("nb"),
-        (vec_dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos").desc, col("nb").asc)))
-      .where(col("rn") <= Similarity.NndBuildK)
-      .select(col("vec_id"), col("rn").cast("int").as("rn"), col("nb"))
-      .write.mode(ow).parquet(s"$cd/lists")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(cd, "_GANN_COMPACT_OK") {
+      val tombs = s.read.parquet(s"${tombDir(root)}/ids")
+      val (lists, vecs) = mergedFrames(s, d)
+      vecs.join(tombs, Seq("vec_id"), "left_anti").write.mode(ow).parquet(s"$cd/vectors")
+      val cv = s.read.parquet(s"$cd/vectors")
+      val ce = lists.distinct()
+        .join(tombs, Seq("vec_id"), "left_anti")
+        .join(tombs.withColumnRenamed("vec_id", "nb"), Seq("nb"), "left_anti")
+      ce.join(cv.select(col("vec_id"), col("embedding").as("ae"), col("nrm").as("an")),
+          Seq("vec_id"))
+        .join(cv.select(col("vec_id").as("nb"), col("embedding").as("be"),
+          col("nrm").as("bn")), Seq("nb"))
+        .select(col("vec_id"), col("nb"),
+          (vec_dot(col("ae"), col("be")) / (col("an") * col("bn"))).as("cos"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("vec_id").orderBy(col("cos").desc, col("nb").asc)))
+        .where(col("rn") <= Similarity.NndBuildK)
+        .select(col("vec_id"), col("rn").cast("int").as("rn"), col("nb"))
+        .write.mode(ow).parquet(s"$cd/lists")
+    }
     val g = s.read.parquet(s"$cd/lists").select("vec_id", "nb")
     g.agg(countDistinct(col("vec_id")).as("n_vectors"),
         count(lit(1)).as("n_edges"))

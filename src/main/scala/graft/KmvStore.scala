@@ -34,24 +34,28 @@ object KmvStore {
     */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def storeRoot(d: String): String = {
-    // full fingerprint+geometry folded through a 64-bit hash (ADVICE r16:
-    // 32-bit String.hashCode left a collision window where a stale store
-    // could silently serve a different corpus)
-    val key = Sources.fixtureKey(d, "events") +
-      s":kmv:${Aggregations.KmvK}:${Aggregations.KmvM}"
-    val safe = Sources.stableHex64(key)
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_kmv_store/${new java.io.File(d).getName}_$safe"
+  def storeRoot(d: String): String =
+    Artifact.root("kmv_store", d, "events")("kmv", Aggregations.KmvK, Aggregations.KmvM)
+
+  /** The sketch artifact's columns, stated once for the writers'
+    * projection and the explicit-schema reader ([[compactedSketches]]), so
+    * a column change breaks here instead of silently nulling a column.
+    */
+  private val SketchSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("h", LongType), StructField("t", DateType)))
   }
 
-  private def marker(root: String) = new java.io.File(root, "_KMV_OK")
+  private def writeSketches(df: DataFrame, dir: String): Unit =
+    df.select(SketchSchema.fieldNames.toSeq.map(col): _*)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("t").parquet(s"$dir/sketches")
 
   /** True if the persisted store already existed (probe-only path); false
     * if this call had to build it.
     */
   def ensure(s: SparkSession, d: String): Boolean =
-    if (marker(storeRoot(d)).isFile) true else { build(s, d).count(); false }
+    Artifact.ensure(storeRoot(d), "_KMV_OK")(build(s, d).count())
 
   /** Build (or rebuild) the store from the deterministic sketch pipeline
     * and return the per-day summary. The sketch frame is the SAME
@@ -62,13 +66,7 @@ object KmvStore {
   def build(s: SparkSession, d: String): DataFrame = {
     builds.incrementAndGet()
     val root = storeRoot(d)
-    marker(root).delete()
-    Aggregations.kmvSketchFrame(s, d)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("t").parquet(s"$root/sketches")
-    val ok = marker(root)
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_KMV_OK")(writeSketches(Aggregations.kmvSketchFrame(s, d), root))
     summary(s, root)
   }
 
@@ -105,8 +103,7 @@ object KmvStore {
     s"$root/tombstones_${Aggregations.KmvDelFrac}"
 
   def ensureTomb(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(tombDir(storeRoot(d)), "_TOMB_OK").isFile) true
-    else { delete(s, d).count(); false }
+    Artifact.ensure(tombDir(storeRoot(d)), "_TOMB_OK")(delete(s, d).count())
 
   /** The DELETE verb on the sketch store (VERDICT r18 #3): tombstoned
     * users — the deterministic bottom-of-hash-space rule, standing in for
@@ -120,15 +117,14 @@ object KmvStore {
   def delete(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
     val td = tombDir(storeRoot(d))
-    val okf = new java.io.File(td, "_TOMB_OK")
-    okf.delete()
-    Tables.events(s, d)
-      .where(col("user_id").isNotNull)
-      .select(col("user_id"), Det.mhash(col("user_id"), Aggregations.KmvM).as("h"))
-      .where(col("h") * Aggregations.KmvDelFrac < Aggregations.KmvM)
-      .distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(td, "_TOMB_OK") {
+      Tables.events(s, d)
+        .where(col("user_id").isNotNull)
+        .select(col("user_id"), Det.mhash(col("user_id"), Aggregations.KmvM).as("h"))
+        .where(col("h") * Aggregations.KmvDelFrac < Aggregations.KmvM)
+        .distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$td/ids")
+    }
     s.read.parquet(s"$td/ids")
       .agg(count(lit(1)).as("n_tombstoned"), sum(col("user_id")).as("id_sum"))
   }
@@ -147,13 +143,12 @@ object KmvStore {
     * equate "empty" with "unreadable".
     */
   private def compactedSketches(s: SparkSession, d: String): DataFrame =
-    s.read.schema("h BIGINT, t DATE")
+    s.read.schema(SketchSchema)
       .parquet(s"${compactDir(storeRoot(d))}/sketches")
       .select(col("t").cast("date").as("t"), col("h"))
 
   def ensureCompact(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(compactDir(storeRoot(d)), "_KMV_COMPACT_OK").isFile) true
-    else { compact(s, d).count(); false }
+    Artifact.ensure(compactDir(storeRoot(d)), "_KMV_COMPACT_OK")(compact(s, d).count())
 
   /** COMPACT (round 19, second session — the verb matrix completed on the
     * sketch store): physically drop the tombstoned hashes from the
@@ -172,13 +167,10 @@ object KmvStore {
     ensureTomb(s, d)
     val root = storeRoot(d)
     val cd = compactDir(root)
-    val okf = new java.io.File(cd, "_KMV_COMPACT_OK")
-    okf.delete()
-    val tombs = s.read.parquet(s"${tombDir(root)}/ids").select("h")
-    sketches(s, d).join(tombs, Seq("h"), "left_anti")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("t").parquet(s"$cd/sketches")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(cd, "_KMV_COMPACT_OK") {
+      val tombs = s.read.parquet(s"${tombDir(root)}/ids").select("h")
+      writeSketches(sketches(s, d).join(tombs, Seq("h"), "left_anti"), cd)
+    }
     // audit anchored on the BASE days (left join, round 20): a fully
     // depleted day — possible at scale, see compactedSketches — reports
     // k_rows = 0 / hk = 0 / n_dropped = base rather than vanishing from

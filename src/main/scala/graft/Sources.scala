@@ -105,7 +105,7 @@ object Sources {
   /** Memoization key for per-dataset index artifacts: the dataset path
     * PLUS the backing fixture's size and mtime, so data rewritten at the
     * same path can never be served a stale cached index (ADVICE r7). Also
-    * the suffix of [[AnnIndex]]'s persisted-index root for the same
+    * folded into every persisted store's [[Artifact.root]] for the same
     * reason.
     */
   private[graft] def fixtureKey(d: String, table: String): String = {
@@ -114,8 +114,8 @@ object Sources {
   }
 
   /** 64-bit FNV-1a of a key string as 16 hex chars — the directory-name
-    * fingerprint for CROSS-SESSION persisted artifact roots (AnnIndex,
-    * KmvStore, the graph-ANN index). ADVICE r16: the previous 32-bit
+    * fingerprint for CROSS-SESSION persisted artifact roots
+    * ([[Artifact.root]]). ADVICE r16: the previous 32-bit
     * String.hashCode left a real (if tiny) chance that two different
     * corpus fingerprints collide and a probe silently serves the other
     * corpus's artifact — the exact staleness the key exists to prevent;
@@ -129,43 +129,25 @@ object Sources {
     f"$h%016x"
   }
 
-  private val spillCache =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-
   /** Generic per-(process, key) deterministic parquet spill — build once,
-    * read thereafter from the file. The shared engine behind the
+    * read thereafter from the file: an [[Artifact.memo]] whose value is the
+    * spill directory, tagged by `prefix`. The shared engine behind the
     * fingerprint-keyed index caches (minhash band index, jaccard shingles,
     * phash signatures) and, since round 9, the VERIFIED PAIR frames one
     * level up (VERDICT r8 #2): deterministic content means memoization
     * cannot change any result, and the parquet spill (unlike persist)
     * truncates lineage so consumers — labelPropagate rounds especially —
     * plan against a bare file scan. Key must include [[fixtureKey]] so a
-    * rewritten fixture is never served a stale artifact.
-    *
-    * computeIfAbsent only installs a cheap per-key lazy cell — no Spark
-    * work may run under a CHM bin lock, because some builds re-enter this
-    * map (ccBaseLabels → minhashCandidates is a nested memoSpill; nesting
-    * computeIfAbsent on one CHM violates its contract and can livelock on
-    * a bin collision — ADVICE r10). The build runs when the cell is forced,
-    * synchronized per key by the lazy val's own monitor, so concurrent
-    * same-key callers still build exactly once and no loser's spill dir is
-    * ever created (closing the ADVICE r9 race without the r10 hazard).
-    * Spill dirs are never evicted — per-key-per-fixture growth is bounded
-    * by the query surface and cleaned with procDir at JVM exit, fine for a
-    * bench/verify process, not for a long-lived service.
+    * rewritten fixture is never served a stale artifact. Spill dirs live
+    * until [[evictSpills]] or JVM exit (procDir).
     */
   private[graft] def memoSpill(s: SparkSession, key: String, prefix: String)(
-      build: => DataFrame): DataFrame = {
-    val cell = spillCache.computeIfAbsent(key, _ => {
-      lazy val p: String = {
-        val dir = tmpUnique(prefix)
-        build.write.mode(SaveMode.Overwrite).parquet(dir)
-        dir
-      }
-      () => p
+      build: => DataFrame): DataFrame =
+    s.read.parquet(Artifact.memo(prefix, key) {
+      val dir = tmpUnique(prefix)
+      build.write.mode(SaveMode.Overwrite).parquet(dir)
+      dir
     })
-    s.read.parquet(cell())
-  }
 
   /** (file count, total bytes) currently spilled under [[procDir]] —
     * the diagnostic behind VERDICT r10 #8's footprint ask; Bench prints
@@ -182,28 +164,17 @@ object Sources {
     walk(new java.io.File(procDir))
   }
 
-  private val evictHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
-
-  /** Register a cache-clearing callback to run on [[evictSpills]] — every
-    * object holding paths under [[procDir]] (Graph's edge spills, the
-    * minhash/jaccard/fingerprint/PQ index caches) registers one, so an
-    * evict can never leave a cache pointing at a deleted directory.
-    */
-  private[graft] def onSpillEvict(r: Runnable): Unit = evictHooks.add(r)
-
   /** Opt-in spill eviction for long-lived services (VERDICT r10 #8): drop
-    * every memoized spill directory and clear every registered path
-    * cache; the next access rebuilds deterministically. CONTRACT: call
-    * only between queries, when no DataFrame returned earlier is still
-    * live — spilled frames are read lazily, so evicting under a live
-    * consumer yields FileNotFound at its next action. A bench/verify
-    * process never needs this (procDir is removed at JVM exit); a
-    * resident service calls it on its own idle/epoch boundary.
+    * every memoized value and every spill directory; the next access
+    * rebuilds deterministically. CONTRACT: call only between queries, when
+    * no DataFrame returned earlier is still live — spilled frames are read
+    * lazily, so evicting under a live consumer yields FileNotFound at its
+    * next action. A bench/verify process never needs this (procDir is
+    * removed at JVM exit); a resident service calls it on its own
+    * idle/epoch boundary.
     */
   def evictSpills(): Unit = {
-    evictHooks.forEach(_.run())
-    spillCache.clear()
+    Artifact.clearMemos()
     rmTree(new java.io.File(procDir))
   }
 

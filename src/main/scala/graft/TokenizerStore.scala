@@ -48,12 +48,9 @@ object TokenizerStore {
     * serial/distributed regime — proven result-identical — but it costs
     * nothing to fold and removes the proof from the staleness argument.
     */
-  def bpeRoot(d: String): String = {
-    val key = Sources.fixtureKey(d, "documents") +
-      s":bpestore:${Bpe.BpeMerges}:${Bpe.BpeBatchK}:${Bpe.BpeLocalWordCap}"
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_bpe_store/${new java.io.File(d).getName}_${Sources.stableHex64(key)}"
-  }
+  def bpeRoot(d: String): String =
+    Artifact.root("bpe_store", d, "documents")(
+      "bpestore", Bpe.BpeMerges, Bpe.BpeBatchK, Bpe.BpeLocalWordCap)
 
   /** The byte-level family's store: merges only — the id space is
     * STRUCTURAL (byte value + 1, merge rank + 256), so there is no vocab
@@ -61,45 +58,33 @@ object TokenizerStore {
     * exactly how GPT-2-family tokenizers ship (merges.txt + the fixed
     * byte alias table).
     */
-  def byteRoot(d: String): String = {
+  def byteRoot(d: String): String =
     // the byte family's learned content additionally depends on the
     // pretokenizer regex, the per-language perturbation table, and the
     // byte→alias rendering (code-review r18: a pretok-regex retune with
     // the merge dials fixed would otherwise serve a stale merge table —
     // the same omission class the r17 review caught on the gann key);
-    // fold their rendered text, not just the numeric dials
-    // raw rendered text, not a nested hash — the whole key is hashed once
-    // below, and a second 64-bit pre-fold would only narrow the content
-    // fingerprint (second review pass)
-    val key = Sources.fixtureKey(d, "documents") +
-      s":bpebytestore:${Bpe.BpeMerges}:${Bpe.BpeBatchK}:${Bpe.BpeLocalWordCap}:" +
+    // fold their raw rendered text, not a nested hash — the whole key is
+    // hashed once, and a second 64-bit pre-fold would only narrow the
+    // content fingerprint
+    Artifact.root("bpeb_store", d, "documents")(
+      "bpebytestore", Bpe.BpeMerges, Bpe.BpeBatchK, Bpe.BpeLocalWordCap,
       Bpe.BytePretokRe + "|" + Bpe.pertCaseSql + "|" +
-      org.apache.spark.sql.graft.ByteAlias.aliasStr
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_bpeb_store/${new java.io.File(d).getName}_${Sources.stableHex64(key)}"
-  }
+        org.apache.spark.sql.graft.ByteAlias.aliasStr)
 
-  def uniRoot(d: String): String = {
-    val key = Sources.fixtureKey(d, "documents") +
-      s":unistore:${Unigram.MaxSub}:${Unigram.SeedK}:${Unigram.EmRounds}"
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_uni_store/${new java.io.File(d).getName}_${Sources.stableHex64(key)}"
-  }
-
-  private def marker(root: String, name: String) = new java.io.File(root, name)
+  def uniRoot(d: String): String =
+    Artifact.root("uni_store", d, "documents")(
+      "unistore", Unigram.MaxSub, Unigram.SeedK, Unigram.EmRounds)
 
   /** True if the store already existed (frozen-probe path). */
   def ensureBpe(s: SparkSession, d: String): Boolean =
-    if (marker(bpeRoot(d), "_BPE_OK").isFile) true
-    else { buildBpe(s, d).count(); false }
+    Artifact.ensure(bpeRoot(d), "_BPE_OK")(buildBpe(s, d).count())
 
   def ensureUni(s: SparkSession, d: String): Boolean =
-    if (marker(uniRoot(d), "_UNI_OK").isFile) true
-    else { buildUni(s, d).count(); false }
+    Artifact.ensure(uniRoot(d), "_UNI_OK")(buildUni(s, d).count())
 
   def ensureByte(s: SparkSession, d: String): Boolean =
-    if (marker(byteRoot(d), "_BPEB_OK").isFile) true
-    else { buildByte(s, d).count(); false }
+    Artifact.ensure(byteRoot(d), "_BPEB_OK")(buildByte(s, d).count())
 
   /** Byte-level BPE store build: the merge table under the geometry-keyed
     * root, marker last; 1-row audit = merge count, total merged-pair
@@ -110,12 +95,10 @@ object TokenizerStore {
   def buildByte(s: SparkSession, d: String): DataFrame = {
     byteBuilds.incrementAndGet()
     val root = byteRoot(d)
-    marker(root, "_BPEB_OK").delete()
-    Bpe.mergesFrameFrom(s, Bpe.learnBytes(s, d)).orderBy("rank")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
-    val ok = marker(root, "_BPEB_OK")
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_BPEB_OK") {
+      Bpe.mergesFrameFrom(s, Bpe.learnBytes(s, d)).orderBy("rank")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
+    }
     s.read.parquet(s"$root/merges")
       .agg(count(lit(1)).as("n_merges"),
         sum(col("pair_count")).cast(LongType).as("pair_weight"),
@@ -132,15 +115,13 @@ object TokenizerStore {
   def buildBpe(s: SparkSession, d: String): DataFrame = {
     bpeBuilds.incrementAndGet()
     val root = bpeRoot(d)
-    marker(root, "_BPE_OK").delete()
-    Bpe.mergesFrame(s, d).orderBy("rank")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
     import s.implicits._
-    Bpe.vocabIds(s, d).sortBy(_._1).toDF("sym", "id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
-    val ok = marker(root, "_BPE_OK")
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_BPE_OK") {
+      Bpe.mergesFrame(s, d).orderBy("rank")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
+      Bpe.vocabIds(s, d).sortBy(_._1).toDF("sym", "id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
+    }
     bpeSummary(s, root)
   }
 
@@ -155,14 +136,11 @@ object TokenizerStore {
   def buildUni(s: SparkSession, d: String): DataFrame = {
     uniBuilds.incrementAndGet()
     val root = uniRoot(d)
-    marker(root, "_UNI_OK").delete()
-    val (vocab, _) = Unigram.learn(s, d)
     import s.implicits._
-    vocab.toDF("token", "cnt", "cost_micro")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
-    val ok = marker(root, "_UNI_OK")
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_UNI_OK") {
+      Unigram.learn(s, d)._1.toDF("token", "cnt", "cost_micro")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
+    }
     s.read.parquet(s"$root/vocab")
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("cnt")).cast(LongType).as("total_cnt"),
@@ -185,8 +163,7 @@ object TokenizerStore {
   private def spread(s: SparkSession, exploded: DataFrame): DataFrame = exploded
 
   def ensureRetrain(s: SparkSession, d: String): Boolean =
-    if (marker(bpeRetrainRoot(d), "_BPE_OK").isFile) true
-    else { retrainBpe(s, d).count(); false }
+    Artifact.ensure(bpeRetrainRoot(d), "_BPE_OK")(retrainBpe(s, d).count())
 
   /** The frozen BPE encode over a caller-supplied documents frame (round
     * 19: the deleted-serving key anti-joins tombstoned docs BEFORE the
@@ -239,8 +216,7 @@ object TokenizerStore {
     s"$root/tombstones_${Similarity.delTag}"
 
   def ensureTombDocs(s: SparkSession, d: String): Boolean =
-    if (new java.io.File(tombDir(bpeRoot(d)), "_TOMB_OK").isFile) true
-    else { deleteDocs(s, d).count(); false }
+    Artifact.ensure(tombDir(bpeRoot(d)), "_TOMB_OK")(deleteDocs(s, d).count())
 
   /** The DELETE verb on the tokenizer store: persist tombstoned doc_ids
     * (the shared deterministic mid-slice rule over the document id range)
@@ -249,15 +225,14 @@ object TokenizerStore {
   def deleteDocs(s: SparkSession, d: String): DataFrame = {
     ensureBpe(s, d)
     val td = tombDir(bpeRoot(d))
-    val okf = new java.io.File(td, "_TOMB_OK")
-    okf.delete()
-    val mx = documents(s, d).agg(max(col("doc_id")).as("mx"))
-    documents(s, d).crossJoin(broadcast(mx))
-      .where(col("doc_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
-             col("doc_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
-      .select("doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$td/ids")
-    java.nio.file.Files.write(okf.toPath, Array.emptyByteArray)
+    Artifact.publish(td, "_TOMB_OK") {
+      val mx = documents(s, d).agg(max(col("doc_id")).as("mx"))
+      documents(s, d).crossJoin(broadcast(mx))
+        .where(col("doc_id") * Similarity.DelCutDen > col("mx") * Similarity.DelCutLoNum &&
+               col("doc_id") * Similarity.DelCutDen <= col("mx") * Similarity.DelCutHiNum)
+        .select("doc_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$td/ids")
+    }
     s.read.parquet(s"$td/ids")
       .agg(count(lit(1)).as("n_tombstoned"), sum(col("doc_id")).as("id_sum"))
   }
@@ -271,13 +246,9 @@ object TokenizerStore {
     * rule retune must never serve a stale retrained vocab — the r17
     * staleness convention).
     */
-  def bpeRetrainRoot(d: String): String = {
-    val key = Sources.fixtureKey(d, "documents") +
-      s":bpestore:${Bpe.BpeMerges}:${Bpe.BpeBatchK}:${Bpe.BpeLocalWordCap}" +
-      s":retrain:${Similarity.delTag}"
-    val base = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    s"$base/graft_bpe_store/${new java.io.File(d).getName}_retrained_${Sources.stableHex64(key)}"
-  }
+  def bpeRetrainRoot(d: String): String =
+    Artifact.root("bpe_store", d, "documents", "retrained")("bpestore", Bpe.BpeMerges,
+      Bpe.BpeBatchK, Bpe.BpeLocalWordCap, "retrain", Similarity.delTag)
 
   /** The RETRAIN verb: rebuild the BPE store from scratch on the
     * tombstone-filtered corpus (true unlearning for the tokenizer
@@ -295,21 +266,19 @@ object TokenizerStore {
     ensureTombDocs(s, d)
     retrainBuilds.incrementAndGet()
     val root = bpeRetrainRoot(d)
-    marker(root, "_BPE_OK").delete()
-    val tombs = s.read.parquet(s"${tombDir(bpeRoot(d))}/ids")
-    val corpus = documents(s, d).join(tombs, Seq("doc_id"), "left_anti")
-    val art = Bpe.learnLoop(s, corpus,
-      Sources.fixtureKey(d, "documents") +
-        s":bpe_retrain_${Similarity.delTag}:${Bpe.BpeMerges}",
-      Bpe.BpeMerges, Bpe.BpeBatchK)
-    Bpe.mergesFrameFrom(s, art).orderBy("rank")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
     import s.implicits._
-    Bpe.vocabIdsFrom(s, art).sortBy(_._1).toDF("sym", "id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
-    val ok = marker(root, "_BPE_OK")
-    ok.getParentFile.mkdirs()
-    java.nio.file.Files.write(ok.toPath, Array.emptyByteArray)
+    Artifact.publish(root, "_BPE_OK") {
+      val tombs = s.read.parquet(s"${tombDir(bpeRoot(d))}/ids")
+      val corpus = documents(s, d).join(tombs, Seq("doc_id"), "left_anti")
+      val art = Bpe.learnLoop(s, corpus,
+        Sources.fixtureKey(d, "documents") +
+          s":bpe_retrain_${Similarity.delTag}:${Bpe.BpeMerges}",
+        Bpe.BpeMerges, Bpe.BpeBatchK)
+      Bpe.mergesFrameFrom(s, art).orderBy("rank")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/merges")
+      Bpe.vocabIdsFrom(s, art).sortBy(_._1).toDF("sym", "id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/vocab")
+    }
     bpeSummary(s, root)
   }
 
@@ -447,7 +416,7 @@ object TokenizerStore {
       ensureRetrain(s, d)
       // the tombstones are read directly below — a warm retrain marker
       // does NOT imply an intact tombstone artifact (deleteDocs crashes
-      // after okf.delete(), or the dir was cleaned independently); the
+      // after deleting its marker, or the dir was cleaned independently); the
       // sibling deleted key ensures them, so must this one (code-review,
       // this session)
       ensureTombDocs(s, d)

@@ -77,10 +77,6 @@ object Unigram {
     * total (the UNK cost base). Memoized per fixture (bounded: |alphabet| +
     * SeedK rows).
     */
-  private val uniMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Long)]()
-  Sources.onSpillEvict(() => uniMemo.clear())
-
   private[graft] def learn(s: SparkSession, d: String): (Seq[(String, Long, Long)], Long) =
     learnFrom(s, d, trainOnly = false)
 
@@ -103,9 +99,12 @@ object Unigram {
   private def learnFrom(s: SparkSession, d: String, trainOnly: Boolean,
       seedK: Int = SeedK, emRounds: Int = EmRounds): (Seq[(String, Long, Long)], Long) = {
     val splitTag = if (trainOnly) ":train" else ""
-    val key = Sources.fixtureKey(d, "documents") + s":unigram:$MaxSub:$seedK:$emRounds$splitTag"
-    val cached = uniMemo.get(key)
-    if (cached != null) return cached
+    Artifact.memo("unigram", Sources.fixtureKey(d, "documents") +
+      s":unigram:$MaxSub:$seedK:$emRounds$splitTag")(train(s, d, trainOnly, seedK, emRounds))
+  }
+
+  private def train(s: SparkSession, d: String, trainOnly: Boolean,
+      seedK: Int, emRounds: Int): (Seq[(String, Long, Long)], Long) = {
     val docs0 = documents(s, d)
     val docs = if (trainOnly)
       docs0.where(pmod(col("doc_id"), lit(10L)) =!= lit(Bpe.NovelResidue))
@@ -182,9 +181,7 @@ object Unigram {
       tot = vocab.map(_._2).sum
     }
     val t0 = tot
-    val model = (vocab.map { case (t, c) => (t, c, log2Micro(t0) - log2Micro(c)) }, t0)
-    val prev = uniMemo.putIfAbsent(key, model)
-    if (prev != null) prev else model
+    (vocab.map { case (t, c) => (t, c, log2Micro(t0) - log2Micro(c)) }, t0)
   }
 
   val queries: Map[String, Q] = Map(

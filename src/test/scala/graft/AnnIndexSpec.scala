@@ -26,11 +26,15 @@ class AnnIndexSpec extends AnyFunSuite {
     val fresh = spark.newSession()
     val b1 = AnnIndex.builds.get()
     val probe = AnnIndex.probe(fresh, d)
-    // plan audit: index artifacts in, training out
+    // plan audit: index artifacts in, training out. Artifacts are checked
+    // on the scans' root paths — the plan string abbreviates long locations
     val plan = probe.queryExecution.executedPlan.toString
     assert(!plan.contains("min_by"), "probe plan contains a training aggregate")
+    val scanned = TestSpark.scanRoots(probe)
+    val rootName = new java.io.File(AnnIndex.indexRoot(d)).getName
     Seq("coarse_centroids", "codebooks", "codes", "lists").foreach(a =>
-      assert(plan.contains(a), s"probe plan does not scan persisted $a"))
+      assert(scanned.exists(_.endsWith(s"/$rootName/$a")),
+        s"probe plan does not scan persisted $a: $scanned"))
     val got = probe.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(AnnIndex.builds.get() == b1, "probe triggered a rebuild")
     assert(got.nonEmpty)

@@ -19,6 +19,24 @@ object TestSpark {
     i * 1000000L + (x - p) * 1000000L / p
   }
 
+  /** Root paths of every file scan in `df`'s executed plan: the AQE
+    * initial and current plans, query stages, reused exchanges and
+    * subqueries included. Plan strings abbreviate scan locations longer
+    * than 100 characters, so artifact-level plan pins check these paths.
+    */
+  def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def roots(p: SparkPlan): Seq[String] = p.collectWithSubqueries {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      case a: AdaptiveSparkPlanExec => roots(a.initialPlan) ++ roots(a.executedPlan)
+      case q: QueryStageExec => roots(q.plan)
+      case r: ReusedExchangeExec => roots(r.child)
+    }.flatten
+    roots(df.queryExecution.executedPlan).distinct
+  }
+
   lazy val spark: SparkSession = {
     System.setProperty("derby.system.home", "/tmp/graft_derby")
     val s = SparkSession.builder()
