@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 object Bench {
@@ -40,15 +39,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // labelPropagate round telemetry → driver stderr (correlates bench-
     // context regressions with specific rounds; VERDICT r7 defect #1)
@@ -56,18 +47,8 @@ object Bench {
     // Untimed warmup: pay one-time classloading / codegen / parquet-footer
     // costs outside the per-query timings.
     Tables.names.foreach(n => Tables.t(spark, sfDir, n).count())
-    // optional comma-separated subset (dev iteration; driver runs all).
-    // Blank entries are dropped (an empty/typo'd env var must not silently
-    // produce a zero-query "green" run) and unknown names fail loudly.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: $unknown")
-    }
-    val selected = SparkEntry.queries.keySet
-      .filter(name => only.forall(_.contains(name)))
+    // optional comma-separated subset (dev iteration; driver runs all)
+    val selected = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
     // run order: heavy family first, then the rest alphabetically
     // (deterministic across rounds — Map iteration order is not)
     val runOrder = HeavyFirst.filter(selected) ++

@@ -63,12 +63,11 @@ object GraphAnnIndex {
     * construction; the only behavioral change is early-exit granularity
     * (the footer check runs per materialization, so convergence mid-pair
     * costs at most one extra round — the idempotent tail the fixed-round
-    * oracle runs anyway). Overridable for A/B via -Dgraft.beam.fuse;
-    * fuse > 2 measured NO further win (the two keyed exchanges per job
-    * already serialize under AQE, and plan size grows per fused round).
+    * oracle runs anyway). Fuse > 2 measured NO further win (the two keyed
+    * exchanges per job already serialize under AQE, and plan size grows
+    * per fused round).
     */
-  private def beamFuse: Int =
-    Integer.getInteger("graft.beam.fuse", 2).intValue()
+  private val BeamFuse = 2
 
   /** Round budget for the OUT-OF-INDEX query variant: novel queries start
     * cold at the entry point (an in-index probe's own neighborhood is
@@ -996,7 +995,7 @@ object GraphAnnIndex {
       // skipped rounds are the idempotent tail the fixed-round oracle
       // runs anyway, and no caller reads the ex/fr flags.
       // one beam round as a pure frame transformation — composed
-      // [[beamFuse]] times per materialization (see the constant's note)
+      // [[BeamFuse]] times per materialization (see the constant's note)
       def step(st: DataFrame): DataFrame = {
         // fr was computed at write time as (rn <= BeamEf && !ex) — the
         // frontier is a pushed-down filter on one boolean
@@ -1032,10 +1031,9 @@ object GraphAnnIndex {
         (if (truncate) grown.where(col("rn") <= BeamEf) else grown)
           .withColumn("fr", !col("ex") && col("rn") <= BeamEf)
       }
-      val fuse = math.max(1, beamFuse)
       var r = 0
       while (r < rounds && !done) {
-        val k = math.min(fuse, rounds - r)
+        val k = math.min(BeamFuse, rounds - r)
         var st = s.read.parquet(curPath)
         for (_ <- 1 to k) st = step(st)
         r += k

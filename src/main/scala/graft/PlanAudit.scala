@@ -3,25 +3,43 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: emit PLANS.md — a per-query inventory of the physical-plan
-  * properties the 100 TB design cares about (shuffle count, broadcast vs
-  * shuffled joins, scan count and pushdown, top-k short-circuits). One
-  * compact table instead of 100+ pages of explain output;
-  * PlanRegressionSpec pins the load-bearing rows. (Codegen spans are not
-  * reported: AQE finalizes them only at execution.)
-  * Usage: runMain graft.PlanAudit [sfDir]
+/** Dev tool, two modes, both under the [[GraftSession]] configuration the
+  * timings run on (cores from `SPARK_GRAFT_CPUS`):
+  * - `runMain graft.PlanAudit [sfDir]` emits PLANS.md — a per-query
+  *   inventory of the physical-plan properties the 100 TB design cares
+  *   about (shuffle count, broadcast vs shuffled joins, scan count and
+  *   pushdown, top-k short-circuits). One compact table instead of 100+
+  *   pages of explain output; PlanRegressionSpec pins the load-bearing
+  *   rows. (Codegen spans are not reported: AQE finalizes them only at
+  *   execution.)
+  * - `runMain graft.PlanAudit --formatted [sfDir] [q...]` dumps
+  *   `explain("formatted")` for every query (or the named ones), so plan
+  *   regressions — lost pushdown, surprise shuffles, missing broadcasts,
+  *   codegen breaks — are visible in full.
   */
 object PlanAudit {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val formatted = argv.headOption.contains("--formatted")
+    val args = if (formatted) argv.tail else argv
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = GraftSession.envCores
+    val spark = GraftSession(cores)
     spark.sparkContext.setLogLevel("ERROR")
+    if (formatted) explain(spark, sfDir, args.drop(1).toSeq)
+    else audit(spark, sfDir, cores)
+    spark.stop()
+  }
+
+  private def explain(spark: SparkSession, sfDir: String, only: Seq[String]): Unit = {
+    val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { n =>
+      println(s"\n===================== $n =====================")
+      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+    }
+  }
+
+  private def audit(spark: SparkSession, sfDir: String, cores: Int): Unit = {
     def count(p: String, token: String): Int = token.r.findAllIn(p).size
     // the iterative CC queries execute a driver convergence loop whose
     // final plan PRINTS every cached round's subtree repeatedly — operator
@@ -61,7 +79,7 @@ object PlanAudit {
     }
     val md = new StringBuilder
     md ++= "# PLANS — physical-plan audit (auto-generated by `graft.PlanAudit`)\n\n"
-    md ++= s"Source: `$sfDir`, local[8], shuffle.partitions=8. Columns: shuffles = "
+    md ++= s"Source: `$sfDir`, local[$cores], shuffle.partitions=$cores. Columns: shuffles = "
     md ++= "Exchange operators (hash/range/single); BHJ/SMJ/BNLJ = join operators; "
     md ++= "scans = source scan operators; notes flag the scale-relevant "
     md ++= "short-circuits (TakeOrdered top-k, WindowGroupLimit map-side rank "
@@ -71,6 +89,5 @@ object PlanAudit {
     rows.foreach(r => { md ++= r; md ++= "\n" })
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println(s"wrote PLANS.md (${rows.size} queries)")
-    spark.stop()
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale smoke: replicate the sf0.1 documents corpus k× (each copy
@@ -42,12 +42,7 @@ object ProfScale {
       System.setProperty("graft.cc.forceLoop", "true")
     val only = args.drop(1).filterNot(_.startsWith("--")).toSet
     val base = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("WARN")
     val big = Sources.tmpUnique(s"docs_x$k")
     val docs = Tables.documents(spark, base)

@@ -88,7 +88,7 @@ object Similarity {
 
   /** One live release-listener per (session, tag): re-constructing the same
     * operator replaces (and unregisters) the previous listener, so plan-only
-    * constructions (ContractSpec schema checks, PlanAudit, Explain) cannot
+    * constructions (ContractSpec schema checks, PlanAudit) cannot
     * accumulate zombie listeners on the session bus — at most one traversal
     * per tag per execution. Values are WeakReferences: a strong listener ref
     * would chain value → listenerManager → session, rooting the weak KEY
@@ -791,7 +791,7 @@ object Similarity {
     * truncated lineage).
     */
   /** Per-round wall-time telemetry switch (ADVICE r7: unconditional stderr
-    * from library code pollutes consumers) — ProfCC and Bench turn it on;
+    * from library code pollutes consumers) — Bench turns it on;
     * production callers inherit silence.
     */
   private def ccVerbose: Boolean = java.lang.Boolean.getBoolean("graft.cc.verbose")

@@ -24,6 +24,19 @@ object SparkEntry {
       Unigram.queries ++ KmvStore.queries ++ GraphAnnIndex.queries ++
       TokenizerStore.queries ++ Retrieval.queries ++ Catalog.queries
 
+  /** The query subset a comma-separated `spec` names (Bench's
+    * `SPARK_GRAFT_ONLY`, Verify's 3rd argument). Blank entries are dropped,
+    * so a trailing comma cannot silently shrink the selection; a blank spec
+    * selects every query, so an empty variable cannot produce a zero-query
+    * "green" run; unknown names fail loudly.
+    */
+  def select(spec: String): Set[String] = {
+    val named = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = named -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names in subset: $unknown")
+    if (named.isEmpty) queries.keySet else named
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,34 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query subset (fast local iteration).
-    // Mirrors Bench's guards: blank entries dropped (a trailing comma must
-    // not silently shrink the selection) and unknown names fail loudly.
-    val only: Set[String] =
-      if (args.length > 2)
-        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
-      else Set.empty
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names in subset arg: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // optional 3rd arg: comma-separated query subset (fast local iteration)
+    val selected = SparkEntry.select(if (args.length > 2) args(2) else "")
+    val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -36,21 +21,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(SparkEntry.oracleSql)(DefaultFormats))
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import TestSpark.{spark, Sf0001}
 
@@ -44,6 +45,13 @@ class ContractSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"§2 keys not implemented: $missing")
   }
 
+  test("query subset: blank entries dropped, blank spec selects all, unknown names throw") {
+    // Bench's SPARK_GRAFT_ONLY and Verify's 3rd argument both parse here
+    assert(SparkEntry.select("join_anti,,agg_global") == Set("join_anti", "agg_global"))
+    assert(SparkEntry.select(" , ") == SparkEntry.queries.keySet)
+    assertThrows[IllegalArgumentException](SparkEntry.select("join_anti,nope"))
+  }
+
   test("every multi-row oracle carries an ORDER BY (rule D1)") {
     // single-row global aggregates are exempt (no row order to pin)
     val singleRow = Set("agg_global", "etl_dq_checks", "etl_compact_small_files",
@@ -62,6 +70,22 @@ class ContractSpec extends AnyFunSuite {
     assert(unordered.isEmpty, s"oracles without total order: $unordered")
   }
 
+  /** One pass over every query in sorted order: build the frame, read its
+    * schema, then count it, before the next query is built. Building all
+    * frames first would strand earlier ones: re-constructing an operator
+    * replaces its tag's release listener (`Similarity.releaseListeners`),
+    * and some constructions rewrite shared tmp paths. Each entry is the
+    * query name, its built frame's schema (or the construction failure)
+    * and its row count (or the failure to count).
+    */
+  private lazy val census: Seq[(String, Either[Throwable, StructType], Either[Throwable, Long])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      try {
+        val df = fn(spark, Sf0001)
+        (name, Right(df.schema), try Right(df.count()) catch { case e: Throwable => Left(e) })
+      } catch { case e: Throwable => (name, Left(e), Left(e)) }
+    }
+
   test("no array/map/struct/binary/decimal columns in registered outputs") {
     // Driver-harness constraints (round 1, VERDICT.md "What's wrong" #1/#2):
     // nested/binary cells crash the driver's pandas row sort
@@ -69,9 +93,9 @@ class ContractSpec extends AnyFunSuite {
     // trailing zeros that DuckDB's float64 conversion drops — both fail the
     // stringify-then-hash compare even on identical values. Finals must be
     // scalar, and money finals must be DOUBLE (Det.dsum2/4, .cast(DoubleType)).
-    import org.apache.spark.sql.types._
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      fn(spark, Sf0001).schema.fields.collect {
+    val offenders = census.flatMap { case (name, schema, _) =>
+      // a frame that cannot be built fails this test with its own error
+      schema.fold(e => throw e, identity).fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] || f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] || f.dataType == BinaryType ||
                   f.dataType.isInstanceOf[DecimalType] =>
@@ -89,11 +113,12 @@ class ContractSpec extends AnyFunSuite {
     // join_anti is legitimately empty (every customer has orders) — its
     // ORACLE is empty too, so the hash match still passes.
     val mayBeEmpty = Set("join_anti", "set_except")
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val n = fn(spark, Sf0001).count()
-        if (n == 0 && !mayBeEmpty.contains(name)) Some(s"$name: empty") else None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(100)}") }
+    val failures = census.flatMap { case (name, _, rows) =>
+      rows match {
+        case Right(n) =>
+          if (n == 0 && !mayBeEmpty.contains(name)) Some(s"$name: empty") else None
+        case Left(e) => Some(s"$name: ${e.getMessage.take(100)}")
+      }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

@@ -63,9 +63,10 @@ class SkewSpec extends AnyFunSuite {
     // right child is Sort(HashAggregate(ShuffleQueryStage)).
     // OptimizeSkewedJoin only matches Sort(ShuffleQueryStage) with an
     // ENSURE_REQUIREMENTS shuffle origin on BOTH sides — against the
-    // aggregate-partitioned dim the rule never fires at all (verified via
-    // SkewProbe: skewMarker=false in every conf combination, including
-    // forceOptimizeSkewedJoin=true and coalescePartitions disabled).
+    // aggregate-partitioned dim the rule never fires at all (measured in
+    // DESIGN.md round 13: skewMarker=false in every conf combination,
+    // including forceOptimizeSkewedJoin=true and coalescePartitions
+    // disabled).
     // Breaking the dim's partitioning forces the join's own exchange on
     // k2, and the marker appears with PLAIN defaults. At real scale the
     // same applies: a dim that arrives pre-partitioned on the join key is

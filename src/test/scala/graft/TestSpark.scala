@@ -37,18 +37,15 @@ object TestSpark {
     roots(df.queryExecution.executedPlan).distinct
   }
 
+  /** The engine's session ([[GraftSession]]) on 8 cores. Its overrides keep
+    * the Derby metastore and the warehouse out of the working directory.
+    * The warehouse dir is a static conf; the builder reads it from the
+    * `spark.*` system property.
+    */
   lazy val spark: SparkSession = {
     System.setProperty("derby.system.home", "/tmp/graft_derby")
-    val s = SparkSession.builder()
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    System.setProperty("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+    val s = GraftSession(8)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
