@@ -41,9 +41,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
-    // labelPropagate round telemetry → driver stderr (correlates bench-
-    // context regressions with specific rounds; VERDICT r7 defect #1)
-    System.setProperty("graft.cc.verbose", "true")
     // Untimed warmup: pay one-time classloading / codegen / parquet-footer
     // costs outside the per-query timings.
     Tables.names.foreach(n => Tables.t(spark, sfDir, n).count())

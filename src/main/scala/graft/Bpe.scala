@@ -331,13 +331,13 @@ object Bpe {
     * regardless of frame size. Results are BIT-IDENTICAL: the batched
     * distributed loop is provably serial-equivalent (selectBatch), and
     * the driver regime IS serial — BpeSpec pins both regimes equal under
-    * `-Dgraft.bpe.forceLoop`. Production 100 TB corpora carry 10⁶–10⁷
+    * `spark.graft.regime=loop`. Production 100 TB corpora carry 10⁶–10⁷
     * types and take the distributed loop; every fixture (and the ciphered
     * octave replicas) sits far below the cap, which is why the driver
     * regime owns the bench numbers — the r15 cold-top was exactly this
     * loop's job floor (text_bpe_encode 13.6 s cold, ~12 rounds × 2 jobs).
     */
-  val BpeLocalWordCap = 200000L
+  val BpeLocalWordCap = 200000
 
   private def cpSeq(w: String): Seq[String] =
     w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
@@ -396,64 +396,46 @@ object Bpe {
     * groups on it), so char-level and byte-level BPE share one loop and
     * one serial-equivalence proof. Two-regime (round 16): a vocabulary at
     * or under [[BpeLocalWordCap]] types trains driver-side ([[serialLearn]]
-    * — bit-identical results, zero per-round jobs); `-Dgraft.bpe.forceLoop`
-    * restores the distributed loop for specs and octaves, under a
-    * DISTINCT spill key so the forced run actually executes (a shared key
-    * would hand the spec the other regime's cached artifact). One learned
+    * — bit-identical results, zero per-round jobs); the session conf
+    * `spark.graft.regime=loop` ([[Regime]]) restores the distributed loop
+    * for specs and octaves, under a DISTINCT memo key (the regime is part
+    * of it) so the forced run actually executes (a shared key would hand
+    * the spec the other regime's cached artifact). One learned
     * artifact per (process, key): merge table + final word-symbol frame,
     * parquet-spilled; the key carries the documents fixture fingerprint so
     * an in-place rewrite invalidates the memo.
     */
-  private[graft] def learnLoopWf(s: SparkSession, wf0: DataFrame, key0: String,
-      nMerges: Int, batchK: Int): (String, String, String) = {
-    val forceLoop = java.lang.Boolean.getBoolean("graft.bpe.forceLoop")
-    val key = if (forceLoop) key0 + ":loop" else key0
-    Artifact.memo("bpe_learn", key)(learnSpills(s, wf0, key, forceLoop, nMerges, batchK))
-  }
+  private[graft] def learnLoopWf(s: SparkSession, wf0: DataFrame, key: String,
+      nMerges: Int, batchK: Int): (String, String, String) =
+    Artifact.memo("bpe_learn", s"$key:${Regime(s)}")(learnSpills(s, wf0, nMerges, batchK))
 
   /** The learn behind [[learnLoopWf]]: (merges, final syms, word-freq) spill paths. */
-  private def learnSpills(s: SparkSession, wf0: DataFrame, key: String,
-      forceLoop: Boolean, nMerges: Int, batchK: Int): (String, String, String) = {
-    val wfPath = Sources.tmpUnique("bpe_wf")
-    wf0.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(wfPath)
-    if (!forceLoop) {
-      val wfS = s.read.parquet(wfPath)
-      val nTypes = wfS.count()
-      if (nTypes <= BpeLocalWordCap) {
-        import s.implicits._
-        val wfMap = wfS.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val (merges, symRows) = serialLearn(wfMap, nMerges)
-        val mergesPath = Sources.tmpUnique("bpe_merges")
-        merges.toDF("rank", "s1", "s2", "pair_count")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(mergesPath)
-        val symsPath = Sources.tmpUnique("bpe_syms_local")
-        symRows.toDF("word", "pos", "sym")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(symsPath)
-        System.err.println(
-          s"[bpe] $key: ${merges.length} merges driver-side ($nTypes types)")
-        return (mergesPath, symsPath, wfPath)
-      }
-    }
+  private def learnSpills(s: SparkSession, wf0: DataFrame,
+      nMerges: Int, batchK: Int): (String, String, String) = {
+    import s.implicits._
+    val wfPath = Sources.spill(wf0, "bpe_wf")
     val wf = s.read.parquet(wfPath)
+    for (rows <- Regime.local(wf, BpeLocalWordCap)) {
+      val (merges, symRows) = serialLearn(rows.map(r => (r.getString(0), r.getLong(1))).toSeq, nMerges)
+      return (Sources.spill(merges.toDF("rank", "s1", "s2", "pair_count"), "bpe_merges"),
+        Sources.spill(symRows.toDF("word", "pos", "sym"), "bpe_syms_local"), wfPath)
+    }
     val w = Window.partitionBy("word").orderBy("pos")
     // seed: one row per (word, char position)
-    var symsPath = Sources.tmpUnique("bpe_syms0")
     // sequence(1, 0) in Spark auto-steps DOWN to [1, 0] — an empty word
     // (split on consecutive spaces) would seed two ""-symbol rows here
     // while the oracle's range(1, len+1) yields none (code-review r13);
     // the empty-array guard makes both sides emit zero rows identically
-    wf.select(col("word"),
+    val seed = wf.select(col("word"),
         explode(when(length(col("word")) >= 1,
           sequence(lit(1L), length(col("word")).cast(LongType)))
           .otherwise(array().cast("array<bigint>"))).as("pos"))
       .select(col("word"), col("pos"),
         col("word").substr(col("pos").cast(IntegerType), lit(1)).as("sym"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(symsPath)
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var round = 0
-    while (merges.length < nMerges) {
-      round += 1
-      val syms = s.read.parquet(symsPath)
+    // every round learns at least one merge (selectBatch keeps its first
+    // pair), so nMerges rounds bound the loop
+    val symsPath = Rounds.run(s, "bpe_syms", seed, nMerges, spillInit = true) { syms =>
       // bounded driver collect: batchK+1 rows — the walk in selectBatch
       // never looks past position batchK+1 (the +1 row only supplies
       // c_stop when the walk fills the whole batch without a conflict)
@@ -497,7 +479,6 @@ object Bpe {
         .withColumn("pos",
           row_number().over(Window.partitionBy("word").orderBy("opos")).cast(LongType))
         .select("word", "pos", "sym")
-      val p = Sources.tmpUnique(s"bpe_syms$round")
       // the loop frame is vocabulary-sized (types, not tokens); bound the
       // spill's file count so the rounds don't scatter rounds×32 tiny
       // files. repartition, NOT coalesce (VERDICT r13 #3): coalesce
@@ -505,16 +486,10 @@ object Bpe {
       // while repartition pays one tiny round-robin shuffle on the
       // vocabulary-sized frame and leaves the compute at full parallelism
       // — the etl_compact_small_files distinction.
-      next.repartition(4).write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-      symsPath = p
-    }
-    System.err.println(
-      s"[bpe] $key: ${merges.length} merges in $round rounds (batchK=$batchK)")
-    val mergesPath = Sources.tmpUnique("bpe_merges")
-    import s.implicits._
-    merges.toSeq.toDF("rank", "s1", "s2", "pair_count")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(mergesPath)
-    (mergesPath, symsPath, wfPath)
+      next.repartition(4)
+    }(_ => merges.length >= nMerges)
+    (Sources.spill(merges.toSeq.toDF("rank", "s1", "s2", "pair_count"), "bpe_merges"),
+      symsPath, wfPath)
   }
 
   /** The learned merge table: (rank, s1, s2, merged, pair_count). */
@@ -603,8 +578,8 @@ object Bpe {
 
   /** The encoded corpus as a STANDING ARTIFACT: (doc_id, shard, pos, ids)
     * — one row per word occurrence with its subword-id array, memoSpilled
-    * per (fixture, merge geometry). This is what a production pipeline
-    * stores after tokenization; every consumer (text_bpe_encode,
+    * per (fixture, merge geometry, [[Regime]]). This is what a production
+    * pipeline stores after tokenization; every consumer (text_bpe_encode,
     * pack_sequences_bpe) reads the parquet instead of re-running the
     * merge fold. Measured why (bench r13, sf0.1): the 16-deep aggregate()
     * fold chain never enters whole-stage codegen (HOFs are interpreted),
@@ -619,7 +594,7 @@ object Bpe {
     */
   private[graft] def encodedCorpus(s: SparkSession, d: String): DataFrame =
     Sources.memoSpill(s,
-        Sources.fixtureKey(d, "documents") + s":bpe_enc:$BpeMerges", "bpe_enc") {
+        Sources.fixtureKey(d, "documents") + s":bpe_enc:$BpeMerges:${Regime(s)}", "bpe_enc") {
       encodedCorpusBuild(s, d)
     }
 

@@ -249,7 +249,7 @@ object Graph {
       val nodes = part(s, d).select(col("p_partkey").as("doc_id"))
       // durableEdges: the edge frame is the memoized parquet spill — no
       // cache or materialization job needed (VERDICT r7 #5)
-      Similarity.labelPropagate(nodes, e, tag = "graph_cc", durableEdges = true)
+      Similarity.labelPropagate(nodes, e, durableEdges = true)
         .select(col("doc_id").as("node"), col("cluster_id").as("component_id"))
         .orderBy("node")
     }),
@@ -259,9 +259,10 @@ object Graph {
     // pagerank (centrality): hop distance from a seed set (part ids <
     // BfsSeedCap that appear as graph endpoints) for every node within
     // BfsRounds hops; unreached nodes are excluded on both engines. Same
-    // two-regime gate as CC/kcore: a graph at or under CcLocalEdgeCap
-    // mirrored edges runs textbook frontier BFS driver-side (exact, and
-    // ~10x on fixtures — the per-write-job floor dominates tiny loops);
+    // two-regime gate as CC/kcore ([[Regime]]; `spark.graft.regime=loop`
+    // forces the loop): a graph at or under CcLocalEdgeCap mirrored edges
+    // runs textbook frontier BFS driver-side (exact, and ~10x on
+    // fixtures — the per-write-job floor dominates tiny loops);
     // above it, fixed-round distributed relaxation: each round is one
     // edges ⋈ dist equi-join + a min aggregation — O(edges) shuffled per
     // round, the labelPropagate state contract — fused two rounds per
@@ -274,10 +275,7 @@ object Graph {
     // discovered distances are final (BFS never lowers a distance).
     "graph_bfs_distance" -> ((s, d) => {
       val e0 = orientedCoEdges(s, d).select(col("src"), col("dst"))
-      val probe =
-        if (Similarity.ccForceLoop) null
-        else e0.limit(Similarity.CcLocalEdgeCap + 1).collect()
-      if (probe != null && probe.length <= Similarity.CcLocalEdgeCap) {
+      Regime.local(e0, Similarity.CcLocalEdgeCap).map { probe =>
         val adj = scala.collection.mutable.HashMap[Long,
           scala.collection.mutable.ArrayBuffer[Long]]()
         probe.foreach { r =>
@@ -296,36 +294,22 @@ object Graph {
         }
         import s.implicits._
         dist.toSeq.toDF("node", "dist").orderBy("node")
-      } else {
+      }.getOrElse {
         val sym = e0.select(explode(array(
             struct(col("src").as("a"), col("dst").as("b")),
             struct(col("dst").as("a"), col("src").as("b")))).as("x"))
           .select(col("x.a").as("src"), col("x.b").as("dst"))
-        var dist = sym.where(col("src") < BfsSeedCap)
+        val seeds = sym.where(col("src") < BfsSeedCap)
           .select(col("src").as("node")).distinct()
           .withColumn("dist", lit(0L))
-        var r = 0
-        var prev = -1L
-        while (r < BfsRounds) {
-          val take = math.min(2, BfsRounds - r)
-          var df = dist
-          (1 to take).foreach { _ =>
-            df = df.unionAll(
-                sym.join(df, col("src") === col("node"))
-                  .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist")))
-              .groupBy("node").agg(min("dist").as("dist"))
-          }
-          val obs = org.apache.spark.sql.Observation()
-          val p = Sources.tmpUnique("bfs_round")
-          df.observe(obs, count(lit(1)).as("nodes"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-          val n = obs.get("nodes").asInstanceOf[Long]
-          dist = s.read.parquet(p)
-          r += take
-          if (n == prev) r = BfsRounds // frontier empty — rest are no-ops
-          prev = n
-        }
-        dist.orderBy("node")
+        s.read.parquet(Rounds.run(s, "bfs", seeds, BfsRounds, fuse = 2,
+            observed = Some(count(lit(1)))) { df =>
+          df.unionAll(
+              sym.join(df, col("src") === col("node"))
+                .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist")))
+            .groupBy("node").agg(min("dist").as("dist"))
+        }(r => r.observed == r.previous)) // frontier empty — rest are no-ops
+          .orderBy("node")
       }
     }),
 
@@ -351,13 +335,10 @@ object Graph {
       // SAME bounded-rounds-with-early-exit semantics over the collected
       // edge array, bit-identical by construction (each round drops the
       // identical edge set; after the fixpoint every round is the
-      // identity either way). -Dgraft.cc.forceLoop=true restores the
-      // distributed loop (spec/ProfScale escape hatch).
+      // identity either way). `spark.graft.regime=loop` ([[Regime]])
+      // forces the distributed loop (spec/ProfScale escape hatch).
       val edges0 = orientedCoEdges(s, d).select(col("src").as("p1"), col("dst").as("p2"))
-      val probe =
-        if (Similarity.ccForceLoop) null
-        else edges0.limit(Similarity.CcLocalEdgeCap + 1).collect()
-      if (probe != null && probe.length <= Similarity.CcLocalEdgeCap) {
+      Regime.local(edges0, Similarity.CcLocalEdgeCap).map { probe =>
         var cur = probe.map(r => (r.getLong(0), r.getLong(1)))
         var r = 0
         var prev = -1
@@ -375,42 +356,26 @@ object Graph {
           coreDeg(b) = coreDeg.getOrElse(b, 0L) + 1 }
         import s.implicits._
         coreDeg.toSeq.toDF("node", "core_deg").orderBy("node")
-      } else {
-      def peelOnce(df: DataFrame): DataFrame = {
-        val deg = df.select(col("p1").as("node"))
-          .unionAll(df.select(col("p2").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val keep = deg.where(col("deg") >= KcoreK).select("node")
-        df.join(keep.withColumnRenamed("node", "p1"), Seq("p1"), "left_semi")
-          .join(keep.withColumnRenamed("node", "p2"), Seq("p2"), "left_semi")
-      }
-      // two peel rounds per write job (the labelPropagate fused-double-hop
-      // economics: the per-ACTION fixed cost dominates this loop, and a
-      // 2-deep plan references its input 9 times — against a bare parquet
-      // scan that is cheap, while depth 3 measured slower on the CC loop).
-      // Early exit on an unchanged edge count is EXACT: peel only removes
-      // edges (monotone), so equal count ⇒ equal set ⇒ every remaining
-      // round is the identity — bounded semantics preserved.
-      var cur = edges0
-      var prev = -1L
-      var r = 0
-      while (r < KcoreRounds) {
-        val take = math.min(2, KcoreRounds - r)
-        var df = cur
-        (1 to take).foreach(_ => df = peelOnce(df))
-        val obs = org.apache.spark.sql.Observation()
-        val p = Sources.tmpUnique("kcore_round")
-        df.observe(obs, count(lit(1)).as("edges"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-        val n = obs.get("edges").asInstanceOf[Long]
-        cur = s.read.parquet(p)
-        r += take
-        if (n == prev) r = KcoreRounds // fixpoint — rest are no-ops
-        prev = n
-      }
-      cur.select(col("p1").as("node")).unionAll(cur.select(col("p2").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("core_deg"))
-        .orderBy("node")
+      }.getOrElse {
+        // two peel rounds per write job (the labelPropagate fused-double-hop
+        // economics: the per-ACTION fixed cost dominates this loop, and a
+        // 2-deep plan references its input 9 times — against a bare parquet
+        // scan that is cheap, while depth 3 measured slower on the CC loop).
+        // Early exit on an unchanged edge count is EXACT: peel only removes
+        // edges (monotone), so equal count ⇒ equal set ⇒ every remaining
+        // round is the identity — bounded semantics preserved.
+        val cur = s.read.parquet(Rounds.run(s, "kcore", edges0, KcoreRounds, fuse = 2,
+            observed = Some(count(lit(1)))) { df =>
+          val deg = df.select(col("p1").as("node"))
+            .unionAll(df.select(col("p2").as("node")))
+            .groupBy("node").agg(count(lit(1)).as("deg"))
+          val keep = deg.where(col("deg") >= KcoreK).select("node")
+          df.join(keep.withColumnRenamed("node", "p1"), Seq("p1"), "left_semi")
+            .join(keep.withColumnRenamed("node", "p2"), Seq("p2"), "left_semi")
+        }(r => r.observed == r.previous)) // fixpoint — rest are no-ops
+        cur.select(col("p1").as("node")).unionAll(cur.select(col("p2").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("core_deg"))
+          .orderBy("node")
       }
     })
   )

@@ -813,8 +813,8 @@ object GraphAnnIndex {
 
   /** Loop-control read of a just-written beam spill, from the parquet
     * FOOTERS on the driver — a bounded metadata read (the spill is a
-    * handful of small files), zero Spark jobs. Returns (total rows,
-    * frontier-possibly-nonempty): the spill carries the next round's
+    * handful of small files), zero Spark jobs. Returns whether the
+    * frontier is possibly nonempty: the spill carries the next round's
     * frontier membership as the boolean column `fr`, so its row-group
     * MAX statistic answers "is any frontier row left" without scanning —
     * max(fr) = false across every row group ⇔ the frontier is empty.
@@ -823,11 +823,10 @@ object GraphAnnIndex {
     * fixed round budget is the semantic bound). Never used on
     * corpus-scale inputs.
     */
-  private def spillFooters(s: SparkSession, path: String): (Long, Boolean) = {
+  private def frontierLeft(s: SparkSession, path: String): Boolean = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
-    var rows = 0L
     var frontier = false
     fs.listStatus(p).iterator
       .filter(_.getPath.getName.endsWith(".parquet"))
@@ -835,7 +834,6 @@ object GraphAnnIndex {
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
         try {
-          rows += rd.getRecordCount
           rd.getFooter.getBlocks.forEach { b =>
             if (b.getRowCount > 0) {
               val frCol = b.getColumns.asScala
@@ -854,7 +852,7 @@ object GraphAnnIndex {
           }
         } finally rd.close()
       }
-    (rows, frontier)
+    frontier
   }
 
   /** `truncate = true` (the default) keeps only each query's top-[[BeamEf]]
@@ -928,7 +926,6 @@ object GraphAnnIndex {
       entryHint: Option[Long] = None,
       edgesIn: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.graft.VectorOps.vec_dot
-    val ow = org.apache.spark.sql.SaveMode.Overwrite
     // the graph edges are consumed once per round for all `rounds` rounds
     // — cache the projection instead of re-scanning the lists artifact
     // every round (round 20, VERDICT r19 #2: the beam family's constant
@@ -938,7 +935,13 @@ object GraphAnnIndex {
     // false when the CALLER owns the cache entry: Spark dedupes cached
     // plans, so with two concurrent segment beams the first to finish
     // would otherwise unpersist the shared entry out from under the other
-    // (code-review r20 finding 3).
+    // (code-review r20 finding 3). manageEdgeCache = true therefore
+    // ASSUMES ONE CALLER per lists artifact at a time: two concurrent
+    // beams over the same artifact (e.g. concurrent search() calls) would
+    // plan-match one cache entry, and the first to finish would evict it
+    // under the other. Every caller today runs its beam alone; a
+    // concurrent one must own the cache and pass false, as streamIngest's
+    // segments do.
     // edgesIn = the caller's ALREADY-PERSISTED edge projection (ADVICE
     // r20: the stream segments previously rebuilt edgeFrame(read(path))
     // and relied on CacheManager plan-dedup to hit the caller's persisted
@@ -974,15 +977,12 @@ object GraphAnnIndex {
       // stored ordering (ingest, novel search) reuse `rn` verbatim instead
       // of re-windowing the final state.
       val rw = Window.partitionBy("qid").orderBy(col("cs").desc, col("nb").asc)
-      var curPath = Sources.tmpUnique("beam_r0")
-      scored(q.select(col("qid"), lit(entry).as("nb")))
+      val init = scored(q.select(col("qid"), lit(entry).as("nb")))
         .withColumn("ex", lit(false))
         // round-0 state is exactly one row per qid — rank 1 by definition,
         // unexpanded, so it IS the next round's frontier
         .withColumn("rn", lit(1))
         .withColumn("fr", lit(true))
-        .write.mode(ow).parquet(curPath)
-      var done = false
       // early-exit control WITHOUT a per-round Spark job (r21): each spill
       // carries the NEXT round's frontier membership as the boolean column
       // fr = (rn <= ef && !ex), so "any frontier row left" is the MAX of
@@ -996,7 +996,8 @@ object GraphAnnIndex {
       // runs anyway, and no caller reads the ex/fr flags.
       // one beam round as a pure frame transformation — composed
       // [[BeamFuse]] times per materialization (see the constant's note)
-      def step(st: DataFrame): DataFrame = {
+      s.read.parquet(Rounds.run(s, "beam", init, rounds, fuse = BeamFuse,
+          spillInit = true) { st =>
         // fr was computed at write time as (rn <= BeamEf && !ex) — the
         // frontier is a pushed-down filter on one boolean
         val tx = st.where(col("fr")).select("qid", "nb")
@@ -1030,23 +1031,7 @@ object GraphAnnIndex {
           .withColumn("rn", row_number().over(rw))
         (if (truncate) grown.where(col("rn") <= BeamEf) else grown)
           .withColumn("fr", !col("ex") && col("rn") <= BeamEf)
-      }
-      var r = 0
-      while (r < rounds && !done) {
-        val k = math.min(BeamFuse, rounds - r)
-        var st = s.read.parquet(curPath)
-        for (_ <- 1 to k) st = step(st)
-        r += k
-        val p = Sources.tmpUnique(s"beam_r$r")
-        val rt0 = System.nanoTime()
-        st.write.mode(ow).parquet(p)
-        curPath = p
-        val (c, frontierLeft) = spillFooters(s, p)
-        if (java.lang.Boolean.getBoolean("graft.beam.verbose"))
-          System.err.println(f"[beam] rounds ${r - k + 1}..$r: write ${(System.nanoTime()-rt0)/1e9}%.3f s, rows $c, frontier $frontierLeft")
-        if (!frontierLeft) done = true
-      }
-      s.read.parquet(curPath)
+      }(r => !frontierLeft(s, r.path)))
     } finally if (manageEdgeCache) lists.unpersist(blocking = false)
   }
 

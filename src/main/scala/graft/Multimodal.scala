@@ -610,8 +610,7 @@ object Multimodal {
     // signal-generic; same recursive-CTE closure oracle.
     "mm_phash_cluster" -> ((s, d) =>
       Similarity.labelPropagate(documents(s, d),
-        phashPairs(s, d).select("da", "db"), "cc_phash",
-        durableEdges = true)),
+        phashPairs(s, d).select("da", "db"), durableEdges = true)),
 
     // Exact audio-fingerprint dup edges (round 18, VERDICT r17 #4): the
     // third modality's pair graph — star edges over the decoded-PCM

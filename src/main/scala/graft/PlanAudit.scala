@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Dev tool, two modes, both under the [[GraftSession]] configuration the
@@ -39,43 +39,53 @@ object PlanAudit {
     }
   }
 
+  /** The iterative CC queries execute a driver convergence loop whose
+    * final plan PRINTS every round's subtree repeatedly — operator counts
+    * over that string reflect the printed lineage, not executed work (each
+    * round actually runs 1 join + 1 aggregate over the tiny endpoint
+    * frame), so their rows read n/a.
+    */
+  private val Iterative = Set("dedup_cluster_cc", "dedup_cluster_jaccard",
+    "graph_connected_components", "mm_phash_cluster",
+    "dedup_cluster_incremental")
+
+  /** `name`'s PLANS.md row, from `df`'s physical plan before it runs. One
+    * definition for this tool and the spec that checks PLANS.md against
+    * the code (ContractSpec).
+    */
+  def row(name: String, df: => DataFrame): String =
+    if (Iterative(name))
+      s"| `$name` | — | — | — | — | — | iterative loop: counts n/a (per round: 1 join + 1 agg over O(edges) rows; see Similarity.labelPropagate) |"
+    else {
+      val p = df.queryExecution.executedPlan.toString
+      def count(token: String): Int = token.r.findAllIn(p).size
+      val notes = Seq(
+        if (p.contains("TakeOrderedAndProject")) Some("TakeOrdered") else None,
+        if (p.contains("WindowGroupLimit")) Some("WindowGroupLimit") else None,
+        // per-scan check: ANY scan with a non-empty filter list counts —
+        // a plan mixing filtered and unfiltered scans still pushes down
+        if (count("PushedFilters: \\[[^\\]]") > 0) Some("pushdown") else None,
+        if (p.contains("ReusedExchange")) Some("ReusedExchange") else None,
+        if (count("PartitionFilters: \\[[^\\]]") > 0)
+          Some("partition-pruned") else None
+      ).flatten.mkString(" ")
+      f"| `$name` | ${count("Exchange (hash|range|SinglePartition)")} | " +
+        f"${count("BroadcastHashJoin")} | ${count("SortMergeJoin")} | " +
+        f"${count("BroadcastNestedLoopJoin")} | " +
+        f"${count("Scan parquet|Scan csv|Scan json|Scan text|Scan ExistingRDD")} | $notes |"
+    }
+
+  /** The row of a query whose frame or plan could not be built. */
+  def failedRow(name: String, e: Throwable): String = {
+    // null-message-safe, table-safe (no pipes/newlines), 7 cells
+    val msg = String.valueOf(e.getMessage).replaceAll("[|\r\n]", " ").take(60)
+    s"| `$name` | plan failed | — | — | — | — | $msg |"
+  }
+
   private def audit(spark: SparkSession, sfDir: String, cores: Int): Unit = {
-    def count(p: String, token: String): Int = token.r.findAllIn(p).size
-    // the iterative CC queries execute a driver convergence loop whose
-    // final plan PRINTS every cached round's subtree repeatedly — operator
-    // counts over that string reflect the printed lineage, not executed
-    // work (each round actually runs 1 join + 1 aggregate over the tiny
-    // endpoint frame)
-    val iterative = Set("dedup_cluster_cc", "dedup_cluster_jaccard",
-      "graph_connected_components", "mm_phash_cluster",
-      "dedup_cluster_incremental")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try {
-        if (iterative(name))
-          s"| `$name` | — | — | — | — | — | iterative loop: counts n/a (per round: 1 join + 1 agg over O(edges) rows; see Similarity.labelPropagate) |"
-        else {
-        val p = fn(spark, sfDir).queryExecution.executedPlan.toString
-        val notes = Seq(
-          if (p.contains("TakeOrderedAndProject")) Some("TakeOrdered") else None,
-          if (p.contains("WindowGroupLimit")) Some("WindowGroupLimit") else None,
-          // per-scan check: ANY scan with a non-empty filter list counts —
-          // a plan mixing filtered and unfiltered scans still pushes down
-          if (count(p, "PushedFilters: \\[[^\\]]") > 0) Some("pushdown") else None,
-          if (p.contains("ReusedExchange")) Some("ReusedExchange") else None,
-          if (count(p, "PartitionFilters: \\[[^\\]]") > 0)
-            Some("partition-pruned") else None
-        ).flatten.mkString(" ")
-        f"| `$name` | ${count(p, "Exchange (hash|range|SinglePartition)")} | " +
-          f"${count(p, "BroadcastHashJoin")} | ${count(p, "SortMergeJoin")} | " +
-          f"${count(p, "BroadcastNestedLoopJoin")} | " +
-          f"${count(p, "Scan parquet|Scan csv|Scan json|Scan text|Scan ExistingRDD")} | $notes |"
-        }
-      } catch { case e: Throwable =>
-        // null-message-safe, table-safe (no pipes/newlines), 7 cells
-        val msg = String.valueOf(e.getMessage)
-          .replaceAll("[|\r\n]", " ").take(60)
-        s"| `$name` | plan failed | — | — | — | — | $msg |"
-      }
+      try row(name, fn(spark, sfDir))
+      catch { case e: Throwable => failedRow(name, e) }
     }
     val md = new StringBuilder
     md ++= "# PLANS — physical-plan audit (auto-generated by `graft.PlanAudit`)\n\n"

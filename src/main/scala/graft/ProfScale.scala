@@ -34,16 +34,15 @@ object ProfScale {
     require(flags.subsetOf(known),
       s"unknown flags: ${(flags -- known).mkString(", ")}")
     val verbatim = flags.contains("--verbatim")
-    // `--force-loop` (VERDICT r15 #4): disable the bounded-collect driver
-    // regime for the CC/kcore/BFS family so the octave measures the
-    // DISTRIBUTED loop — the code path the 100 TB claim actually rests on
-    // (the fixtures alone exercise only the driver regime since round 15).
-    if (flags.contains("--force-loop"))
-      System.setProperty("graft.cc.forceLoop", "true")
     val only = args.drop(1).filterNot(_.startsWith("--")).toSet
     val base = "/root/testdata/sf0.1"
     val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("WARN")
+    // `--force-loop` (VERDICT r15 #4): disable the bounded-collect driver
+    // regime for the CC/kcore/BFS family so the octave measures the
+    // DISTRIBUTED loop — the code path the 100 TB claim actually rests on
+    // (the fixtures alone exercise only the driver regime since round 15).
+    if (flags.contains("--force-loop")) spark.conf.set(Regime.Key, "loop")
     val big = Sources.tmpUnique(s"docs_x$k")
     val docs = Tables.documents(spark, base)
     val n = docs.agg(max("doc_id")).head().getLong(0) + 1
@@ -174,13 +173,13 @@ object ProfScale {
     // for 256 merges where the 1× fixture tops out near ~107), merge count
     // varied 16/64/256, serial protocol (batchK=1 — 2 driver-synchronized
     // jobs per MERGE) vs the batched one (2 per ROUND, rounds ≈
-    // nMerges/E[batch]). learnLoop prints its rounds-taken line per entry;
-    // the table for DESIGN.md is (m, batchK) → seconds + rounds.
+    // nMerges/E[batch]). The table is (m, batchK) → seconds; the engine
+    // prints no round counts (DESIGN.md keeps the recorded ones).
     if (flags.contains("--bpe-rounds")) {
       // the study's subject is the DISTRIBUTED schedule (jobs per round);
       // the round-16 driver regime would absorb the fixture-sized frames
       // and measure nothing
-      System.setProperty("graft.bpe.forceLoop", "true")
+      spark.conf.set(Regime.Key, "loop")
       val corpus = Tables.documents(spark, big)
       for (m <- Seq(16, 64, 256); bk <- Seq(1, Bpe.BpeBatchK)) {
         val t0 = System.nanoTime()

@@ -526,7 +526,6 @@ object Similarity {
     Sources.memoSpill(s,
         Sources.fixtureKey(d, "embeddings") + s":nnd2$tag:$rounds:$GraphAnnM", "nnd") {
       import org.apache.spark.sql.graft.VectorOps.{vec_dot, vec_norm}
-      val ow = org.apache.spark.sql.SaveMode.Overwrite
       val e = src.select(col("vec_id"), col("embedding"),
         vec_norm(col("embedding")).as("nrm"))
       val st = e.agg(min(col("vec_id")), max(col("vec_id")), count(lit(1))).collect()(0)
@@ -536,13 +535,11 @@ object Similarity {
           s"(got min=${st.getLong(0)} max=${st.getLong(1)} n=$n)")
       val ea = e.select(col("vec_id").as("v"), col("embedding").as("ev"), col("nrm").as("nv"))
       val eb = e.select(col("vec_id").as("nb"), col("embedding").as("en"), col("nrm").as("nn"))
-      var curPath = Sources.tmpUnique("nnd_r0")
-      e.select(col("vec_id").as("v"), explode(lit(NndInitOffsets.toArray)).as("off"))
+      val init = e.select(col("vec_id").as("v"), explode(lit(NndInitOffsets.toArray)).as("off"))
         .select(col("v"), pmod(col("v") + col("off"), lit(n)).as("nb"),
           lit(true).as("new"))
-        .write.mode(ow).parquet(curPath)
-      for (r <- 1 to rounds) {
-        val cur = s.read.parquet(curPath).select("v", "nb", "new")
+      val last = Rounds.run(s, "nnd", init, rounds, spillInit = true) { st =>
+        val cur = st.select("v", "nb", "new")
         // reverse neighbors, deterministically sampled to NndSampleK per
         // (vertex, flag class) — the paper's ρ-sampling made reproducible
         val rs = cur.select(col("nb").as("v"), col("v").as("nb"), col("new"))
@@ -575,16 +572,13 @@ object Similarity {
           .withColumn("rn", row_number().over(
             Window.partitionBy("v").orderBy(col("cos").desc, col("nb").asc)))
           .where(col("rn") <= NndBuildK)
-        val next = ranked.select("v", "rn", "nb")
+        ranked.select("v", "rn", "nb")
           .join(cur.select(col("v"), col("nb"), lit(true).as("seen")),
             Seq("v", "nb"), "left")
           .select(col("v"), col("rn"), col("nb"),
             col("seen").isNull.as("new"))
-        val p = Sources.tmpUnique(s"nnd_r$r")
-        next.write.mode(ow).parquet(p)
-        curPath = p
-      }
-      s.read.parquet(curPath)
+      }(_ => false)
+      s.read.parquet(last)
         .select(col("v").as("vec_id"), col("rn"), col("nb"))
     }
 
@@ -781,21 +775,13 @@ object Similarity {
     * dedup_cluster_jaccard oracle is an exact transitive closure. The 1024
     * bound is a runaway guard only (a diameter that large means the pair
     * graph is degenerate), far above any real near-dup chain.
-    * Every 3rd round spills to tmp parquet (durable lineage flattening —
-    * see the loop body; plan size, not data, is the iterative cost once
-    * state is small). The driver-side loop is control flow only (a
-    * convergence count). The final labels frame stays cached until the
-    * consuming action runs, then a QueryExecutionListener releases it
-    * (releaseAfterUse) — no session-lifetime retention, and re-executing
-    * the returned frame is always correct (recompute, never a stranded
-    * truncated lineage).
+    * Every round spills to tmp parquet through [[Rounds]] (durable lineage
+    * flattening — see the loop body; plan size, not data, is the
+    * iterative cost once state is small), which deletes each round's
+    * spill once the next is written; the last one stays behind the
+    * returned frame, so re-executing it is always correct. The
+    * driver-side loop is control flow only (a convergence count).
     */
-  /** Per-round wall-time telemetry switch (ADVICE r7: unconditional stderr
-    * from library code pollutes consumers) — Bench turns it on;
-    * production callers inherit silence.
-    */
-  private def ccVerbose: Boolean = java.lang.Boolean.getBoolean("graft.cc.verbose")
-
   /** Propagation steps fused into each labelPropagate round (write job).
     * 2 measured best at sf0.1: depth 3 cut graph_cc to 3 rounds but the
     * deeper per-round plan (3 edges joins + 3 aggregations + 3 self-joins)
@@ -819,14 +805,11 @@ object Similarity {
     * both regimes assign every node the MIN doc_id of its component. At
     * 100 TB the cap is a constant: real corpus graphs exceed it and take
     * the loop; what the cap removes is the fixed-cost regime where the
-    * loop is pure overhead. `-Dgraft.cc.forceLoop=true` disables the
-    * local path (specs pin local == loop; ProfScale can measure the
-    * distributed path explicitly).
+    * loop is pure overhead. The session conf `spark.graft.regime=loop`
+    * ([[Regime]]) disables the local path (specs pin local == loop;
+    * ProfScale can measure the distributed path explicitly).
     */
   val CcLocalEdgeCap = 1000000
-
-  private[graft] def ccForceLoop: Boolean =
-    java.lang.Boolean.getBoolean("graft.cc.forceLoop")
 
   /** Driver union-find over a bounded edge list: path-halving find, then
     * one pass mapping every node to the min id of its component.
@@ -859,7 +842,7 @@ object Similarity {
   }
 
   private[graft] def labelPropagate(docs: DataFrame, pairs: DataFrame,
-      tag: String = "labelPropagate", durableEdges: Boolean = false): DataFrame = {
+      durableEdges: Boolean = false): DataFrame = {
     // Both edge directions in ONE pipeline pass: explode a 2-element array
     // of (da,db)/(db,da) structs. The previous mirror-union ran the whole
     // candidate pipeline as two branches (ReusedExchange shares shuffles
@@ -884,37 +867,21 @@ object Similarity {
       .select(col("e.da").as("da"), col("e.db").as("db"))
     val edges =
       if (durableEdges) mirrored
-      else {
-        val p = Sources.tmpUnique("cc_edges")
-        mirrored.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-        docs.sparkSession.read.parquet(p)
-      }
-    // Two-regime gate (round 15): probe the edge frame with a bounded
-    // limit-collect (for the non-durable case the spill above already
-    // truncated lineage, so the probe is a cheap parquet read either way);
-    // at or under [[CcLocalEdgeCap]] solve driver-side — identical labels,
-    // none of the loop's per-round write-job floor.
-    if (!ccForceLoop) {
-      val head = edges.limit(CcLocalEdgeCap + 1).collect()
-      if (head.length <= CcLocalEdgeCap) {
-        if (ccVerbose) System.err.println(
-          s"[labelPropagate] $tag: local union-find over ${head.length} mirrored edges")
-        val lbls = unionFindMinLabels(head.map(r => (r.getLong(0), r.getLong(1))))
-        import docs.sparkSession.implicits._
-        return docs.select(col("doc_id"))
-          .join(broadcast(lbls.toDF("doc_id", "cluster_id")), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-          .orderBy("doc_id")
-      }
+      else docs.sparkSession.read.parquet(Sources.spill(mirrored, "cc_edges"))
+    // Two-regime gate (round 15, [[Regime]]): probe the edge frame with a
+    // bounded limit-collect (for the non-durable case the spill above
+    // already truncated lineage, so the probe is a cheap parquet read
+    // either way); at or under [[CcLocalEdgeCap]] solve driver-side —
+    // identical labels, none of the loop's per-round write-job floor.
+    for (head <- Regime.local(edges, CcLocalEdgeCap)) {
+      val lbls = unionFindMinLabels(head.map(r => (r.getLong(0), r.getLong(1))))
+      import docs.sparkSession.implicits._
+      return docs.select(col("doc_id"))
+        .join(broadcast(lbls.toDF("doc_id", "cluster_id")), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+        .orderBy("doc_id")
     }
-    var changed = 1L
-    var iter = 0
-    // Two alternating spill paths — a round reads its input from one and
-    // writes its output to the other, so the file being read is never the
-    // file being overwritten.
-    val spillA = Sources.tmpUnique("cc_labels_a")
-    val spillB = Sources.tmpUnique("cc_labels_b")
     // Init labels are INLINE in round 0's job (round 9): with edges a bare
     // parquet scan (durable spill either way), the init subplan is just
     // scan→distinct→project, so fusing it saves one whole write job
@@ -923,91 +890,74 @@ object Similarity {
     // a bad trade when the init frame carried the full candidate pipeline
     // — it is not when the init is three nodes over a file scan; measured
     // across the four clustering consumers this nets ~2 s at sf0.1.
-    var labels = edges.select(col("da").as("doc_id")).distinct()
+    val init = edges.select(col("da").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    while (changed > 0 && iter < 1024) {
-      val roundT0 = System.nanoTime()
-      // One hop: each node takes the min label over itself + its
-      // neighbors. The aggregation threads prev — the label the node held
-      // at the START of the round, carried on the own-tagged self rows —
-      // so change detection costs no extra join.
-      def hop(l: DataFrame): DataFrame = {
-        val selfRows = l.select(col("doc_id"), col("cluster_id"),
-          lit(true).as("own"), col("prev"))
-        val viaNeighbors = edges.join(l, edges("db") === l("doc_id"))
-          .select(edges("da").as("doc_id"), col("cluster_id"),
-            lit(false).as("own"), lit(null).cast(LongType).as("prev"))
-        selfRows.union(viaNeighbors)
-          .groupBy("doc_id")
-          .agg(min("cluster_id").as("cluster_id"),
-            min(when(col("own"), col("prev"))).as("prev"))
-      }
-      // Pointer jumping (path halving): label ← label(label). Labels are
-      // always ids of nodes in the same frame (invariant label(z) <= z,
-      // values drawn from endpoint ids), so the self-join is total; it
-      // compresses pointer chains so a hop's labels point near the root.
-      def pointerJump(m: DataFrame): DataFrame =
-        m.as("l").join(m.as("m"),
-            col("l.cluster_id") === col("m.doc_id"), "left")
-          .select(col("l.doc_id"),
-            coalesce(col("m.cluster_id"), col("l.cluster_id")).as("cluster_id"),
-            col("l.prev"))
-      // CcFuse hop+jump steps fused into each action (r8): on a
-      // chain-shaped graph convergence is bounded by label FLOW — one edge
-      // per hop — so the ROUND COUNT, not per-round data volume, dominates
-      // on the overhead-limited tiny endpoint frames (measured
-      // ~0.55 s/action at sf0.1 for a 3k-node frame regardless of
-      // content). Fusing steps divides the action count for extra edges
-      // joins inside the same write job. The convergence test stays sound:
-      // hop and jump are monotone non-increasing per node, so a fused
-      // round that changes no label implies the single-step fixpoint; a
-      // star graph wastes at most CcFuse−1 cheap steps in its only
-      // propagation round.
-      val start = labels.withColumn("prev", col("cluster_id"))
-      // Convergence observes the LAST fused step only (round 13, VERDICT
-      // r12 #8): `prev` re-arms to the label held just BEFORE the final
-      // hop+jump, so `changed` counts that step alone. Sound by the same
-      // monotone argument as before — hop and jump are non-increasing per
-      // node, so a final step that changes no label means jump(hop(l)) = l,
-      // i.e. the round function's fixpoint (hop-stability ⇒ adjacent nodes
-      // share labels ⇒ component-uniform) — but STRICTLY more aggressive:
-      // a round whose early fused steps did the remaining work now
-      // terminates the loop immediately instead of paying one more full
-      // spill round just to observe changed=0. On the star-shaped dedup
-      // fixtures this halves the round count (2 → 1); a path graph still
-      // iterates to its true fixpoint (TextSimilaritySpec pins it).
-      val preSteps = (1 until CcFuse).foldLeft(start)((l, _) => pointerJump(hop(l)))
-      val rearmed = preSteps.withColumn("prev", col("cluster_id"))
-      val jump = pointerJump(hop(rearmed))
-      // EVERY round spills to tmp parquet (two alternating paths) and reads
-      // back — durable lineage flattening (blocks survive executor loss,
-      // re-execution recomputes from the file), AND shape-identical round
-      // plans: from round 1 on, each round's plan is byte-equivalent modulo
-      // the scan path, so whole-stage codegen compiles once and every later
-      // round hits the generator cache — the dominant fixed cost of a round
-      // on a tiny frame (measured: persist rounds re-compile every round).
-      // The changed-count rides the SAME write job as an observed metric —
-      // one action per round, not a write plus a read-back count.
-      val obs = new org.apache.spark.sql.Observation(s"cc_$tag$iter")
-      val next = {
-        val path = if (iter % 2 == 0) spillA else spillB
-        jump.observe(obs,
-            count(when(col("cluster_id") =!= col("prev"), lit(1))).as("changed"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-        docs.sparkSession.read.parquet(path)
-      }
-      changed = obs.get.apply("changed").asInstanceOf[Long]
-      labels = next.select("doc_id", "cluster_id")
-      // Per-round wall time (VERDICT r6 #2): round 0 carries the whole
-      // candidate pipeline (the edge cache materializes before the loop,
-      // but label init + the first join both consume it), later rounds are
-      // pure propagation — a regression that lands in round 0 is candidate
-      // generation, one spread across rounds is the loop itself.
-      if (ccVerbose) System.err.println(
-        f"[labelPropagate] round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2f s, changed=$changed")
-      iter += 1
+    // One hop: each node takes the min label over itself + its
+    // neighbors. The aggregation threads prev — the label the node held
+    // at the START of the round, carried on the own-tagged self rows —
+    // so change detection costs no extra join.
+    def hop(l: DataFrame): DataFrame = {
+      val selfRows = l.select(col("doc_id"), col("cluster_id"),
+        lit(true).as("own"), col("prev"))
+      val viaNeighbors = edges.join(l, edges("db") === l("doc_id"))
+        .select(edges("da").as("doc_id"), col("cluster_id"),
+          lit(false).as("own"), lit(null).cast(LongType).as("prev"))
+      selfRows.union(viaNeighbors)
+        .groupBy("doc_id")
+        .agg(min("cluster_id").as("cluster_id"),
+          min(when(col("own"), col("prev"))).as("prev"))
     }
-    if (ccVerbose) System.err.println(s"[labelPropagate] converged after $iter rounds")
+    // Pointer jumping (path halving): label ← label(label). Labels are
+    // always ids of nodes in the same frame (invariant label(z) <= z,
+    // values drawn from endpoint ids), so the self-join is total; it
+    // compresses pointer chains so a hop's labels point near the root.
+    def pointerJump(m: DataFrame): DataFrame =
+      m.as("l").join(m.as("m"),
+          col("l.cluster_id") === col("m.doc_id"), "left")
+        .select(col("l.doc_id"),
+          coalesce(col("m.cluster_id"), col("l.cluster_id")).as("cluster_id"),
+          col("l.prev"))
+    // CcFuse hop+jump steps fused into each action (r8): on a
+    // chain-shaped graph convergence is bounded by label FLOW — one edge
+    // per hop — so the ROUND COUNT, not per-round data volume, dominates
+    // on the overhead-limited tiny endpoint frames (measured
+    // ~0.55 s/action at sf0.1 for a 3k-node frame regardless of
+    // content). Fusing steps divides the action count for extra edges
+    // joins inside the same write job. The convergence test stays sound:
+    // hop and jump are monotone non-increasing per node, so a fused
+    // round that changes no label implies the single-step fixpoint; a
+    // star graph wastes at most CcFuse−1 cheap steps in its only
+    // propagation round.
+    //
+    // Convergence observes the LAST fused step only (round 13, VERDICT
+    // r12 #8): `prev` re-arms to the label held just BEFORE the final
+    // hop+jump, so `changed` counts that step alone. Sound by the same
+    // monotone argument as before — hop and jump are non-increasing per
+    // node, so a final step that changes no label means jump(hop(l)) = l,
+    // i.e. the round function's fixpoint (hop-stability ⇒ adjacent nodes
+    // share labels ⇒ component-uniform) — but STRICTLY more aggressive:
+    // a round whose early fused steps did the remaining work now
+    // terminates the loop immediately instead of paying one more full
+    // spill round just to observe changed=0. On the star-shaped dedup
+    // fixtures this halves the round count (2 → 1); a path graph still
+    // iterates to its true fixpoint (TextSimilaritySpec pins it).
+    //
+    // EVERY round spills ([[Rounds]]) — durable lineage flattening (blocks
+    // survive executor loss, re-execution recomputes from the file), AND
+    // shape-identical round plans: from round 1 on, each round's plan is
+    // byte-equivalent modulo the scan path, so whole-stage codegen
+    // compiles once and every later round hits the generator cache — the
+    // dominant fixed cost of a round on a tiny frame (measured: persist
+    // rounds re-compile every round). The changed-count rides the SAME
+    // write job as an observed metric — one action per round.
+    val last = Rounds.run(docs.sparkSession, "cc_labels", init, maxRounds = 1024,
+        observed = Some(count(when(col("cluster_id") =!= col("prev"), lit(1))))) { l =>
+      val start = l.select(col("doc_id"), col("cluster_id"))
+        .withColumn("prev", col("cluster_id"))
+      val preSteps = (1 until CcFuse).foldLeft(start)((m, _) => pointerJump(hop(m)))
+      pointerJump(hop(preSteps.withColumn("prev", col("cluster_id"))))
+    }(_.observed == 0)
+    val labels = docs.sparkSession.read.parquet(last).select("doc_id", "cluster_id")
     // every loop frame is a durable parquet spill — nothing cached remains
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
@@ -1168,14 +1118,14 @@ object Similarity {
     */
   private def ccBaseLabels(s: SparkSession, d: String): DataFrame =
     Sources.memoSpill(s,
-        Sources.fixtureKey(d, "documents") + ":cc_base_labels", "cc_base") {
+        Sources.fixtureKey(d, "documents") + s":cc_base_labels:${Regime(s)}", "cc_base") {
       val basePairs = minhashCandidates(s, d, 0.8)
         .crossJoin(incrMaxId(s, d))
         .where(incrIsBase(col("da"), col("mx")) && incrIsBase(col("db"), col("mx")))
         .select("da", "db")
       val baseDocs = documents(s, d).crossJoin(incrMaxId(s, d))
         .where(!incrIsDelta).select("doc_id")
-      labelPropagate(baseDocs, basePairs, "cc_base")
+      labelPropagate(baseDocs, basePairs)
     }
 
   /** Exact capped-Jaccard >= 0.5 near-dup pairs (see dedup_ngram_jaccard),
@@ -1503,8 +1453,7 @@ object Similarity {
       // carries a DuckDB oracle (recursive CTE); scalatest additionally
       // verifies against an in-test union-find over the same pairs.
       labelPropagate(documents(s, d),
-        minhashCandidates(s, d, 0.8).select("da", "db"), "cc_minhash",
-        durableEdges = true)),
+        minhashCandidates(s, d, 0.8).select("da", "db"), durableEdges = true)),
 
     "dedup_cluster_incremental" -> ((s, d) => {
       // Incremental transitive-closure MAINTENANCE — the clustering verb
@@ -1535,7 +1484,7 @@ object Similarity {
         .select(coalesce(col("ca"), col("da")).as("da"), col("db"))
       val nodes = contracted.select(col("da").as("doc_id"))
         .union(contracted.select(col("db").as("doc_id"))).distinct()
-      val m = labelPropagate(nodes, contracted, "cc_incr")
+      val m = labelPropagate(nodes, contracted)
         .select(col("doc_id").as("node"), col("cluster_id").as("mc"))
       val base = lbl.join(m, lbl("cluster_id") === m("node"), "left")
         .select(lbl("doc_id"), coalesce(col("mc"), lbl("cluster_id")).as("cluster_id"))
@@ -1567,8 +1516,7 @@ object Similarity {
       // propagation is insensitive to duplicate edges, and the cross-
       // signal overlap is tiny
       labelPropagate(documents(s, d),
-        textPairs.unionAll(imgPairs), "cc_xmodal",
-        durableEdges = false)
+        textPairs.unionAll(imgPairs))
     }),
 
     // 3-WAY cross-modal dedup (round 18, VERDICT r17 #4): the third
@@ -1588,8 +1536,7 @@ object Similarity {
       val imgPairs = Multimodal.phashPairs(s, d).select("da", "db")
       val audPairs = Multimodal.audioPairs(s, d).select("da", "db")
       labelPropagate(documents(s, d),
-        textPairs.unionAll(imgPairs).unionAll(audPairs), "cc_xmodal3",
-        durableEdges = false)
+        textPairs.unionAll(imgPairs).unionAll(audPairs))
     }),
 
     "dedup_cluster_jaccard" -> ((s, d) =>
@@ -1598,7 +1545,7 @@ object Similarity {
       // full DuckDB oracle (recursive-CTE transitive closure): the driver
       // gate covers the iterative clustering path, not just scalatest.
       labelPropagate(documents(s, d), jaccardPairs(s, d).select("da", "db"),
-        "cc_jaccard", durableEdges = true)),
+        durableEdges = true)),
 
     "text_decontaminate" -> ((s, d) => {
       // Benchmark decontamination: flag corpus docs sharing any 8-token

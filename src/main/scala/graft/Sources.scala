@@ -34,7 +34,7 @@ object Sources {
     f.delete()
   }
 
-  private lazy val procDir: String = {
+  private[graft] lazy val procDir: String = {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_io_${ProcessHandle.current().pid()}"
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       rmTree(new java.io.File(dir))))
@@ -52,6 +52,13 @@ object Sources {
     */
   private[graft] def tmpUnique(prefix: String): String =
     s"$procDir/unique/${prefix}_${uniqueSeq.incrementAndGet()}"
+
+  /** Writes `df` as parquet to a fresh [[tmpUnique]] path; returns the path. */
+  private[graft] def spill(df: DataFrame, prefix: String): String = {
+    val p = tmpUnique(prefix)
+    df.write.mode(SaveMode.Overwrite).parquet(p)
+    p
+  }
 
   /** Round-robin a COMPACT pre-explode frame across the session's cores
     * when its scan is under-split (OPTIMIZATION r21, guide §2.5 "input
@@ -143,11 +150,7 @@ object Sources {
     */
   private[graft] def memoSpill(s: SparkSession, key: String, prefix: String)(
       build: => DataFrame): DataFrame =
-    s.read.parquet(Artifact.memo(prefix, key) {
-      val dir = tmpUnique(prefix)
-      build.write.mode(SaveMode.Overwrite).parquet(dir)
-      dir
-    })
+    s.read.parquet(Artifact.memo(prefix, key)(spill(build, prefix)))
 
   /** (file count, total bytes) currently spilled under [[procDir]] —
     * the diagnostic behind VERDICT r10 #8's footprint ask; Bench prints

@@ -507,16 +507,15 @@ class BpeSpec extends AnyFunSuite {
         s"native drift on '$w': got=${gotNative(w)} exp=${expSyms(w)}") }
   }
 
-  test("distributed loop equals the driver regime under -Dgraft.bpe.forceLoop") {
+  test("distributed loop equals the driver regime under spark.graft.regime=loop") {
     // round 16 two-regime gate: the default path now trains driver-side
     // below BpeLocalWordCap (and every earlier test in this suite pins it
     // against referenceBpe); forcing the loop must reproduce the SAME
     // merge table and final segmentation — the forced run uses a distinct
-    // spill key, so this actually executes the distributed rounds rather
-    // than reading the driver regime's cache
+    // memo key (the regime is part of it), so this actually executes the
+    // distributed rounds rather than reading the driver regime's cache
     val (expMerges, expSyms) = referenceBpe(fixtureWf, Bpe.BpeMerges)
-    System.setProperty("graft.bpe.forceLoop", "true")
-    try {
+    TestSpark.withRegime(spark, "loop", "bpe_syms") {
       val got = SparkEntry.queries("text_bpe_vocab")(spark, Sf0001).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
       assert(got.toSeq == expMerges,
@@ -525,6 +524,6 @@ class BpeSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
         .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
       assert(gotSyms == expSyms, "loop-regime segmentation drift")
-    } finally System.clearProperty("graft.bpe.forceLoop")
+    }
   }
 }

@@ -71,20 +71,35 @@ class ContractSpec extends AnyFunSuite {
   }
 
   /** One pass over every query in sorted order: build the frame, read its
-    * schema, then count it, before the next query is built. Building all
-    * frames first would strand earlier ones: re-constructing an operator
-    * replaces its tag's release listener (`Similarity.releaseListeners`),
-    * and some constructions rewrite shared tmp paths. Each entry is the
-    * query name, its built frame's schema (or the construction failure)
-    * and its row count (or the failure to count).
+    * schema and its PLANS.md row, then count it, before the next query is
+    * built. Building all frames first would strand earlier ones:
+    * re-constructing an operator replaces its tag's release listener
+    * (`Similarity.releaseListeners`), and some constructions rewrite
+    * shared tmp paths. Each entry is the query name, its built frame's
+    * schema (or the construction failure), its row count (or the failure
+    * to count) and its [[PlanAudit.row]].
     */
-  private lazy val census: Seq[(String, Either[Throwable, StructType], Either[Throwable, Long])] =
+  private lazy val census: Seq[(String, Either[Throwable, StructType], Either[Throwable, Long], String)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         val df = fn(spark, Sf0001)
-        (name, Right(df.schema), try Right(df.count()) catch { case e: Throwable => Left(e) })
-      } catch { case e: Throwable => (name, Left(e), Left(e)) }
+        val row = try PlanAudit.row(name, df) catch { case e: Throwable => PlanAudit.failedRow(name, e) }
+        (name, Right(df.schema), try Right(df.count()) catch { case e: Throwable => Left(e) }, row)
+      } catch { case e: Throwable => (name, Left(e), Left(e), PlanAudit.failedRow(name, e)) }
     }
+
+  test("PLANS.md holds PlanAudit's row for every query, as the code plans it") {
+    // PLANS.md is generated, and nothing else pins most of its rows: a
+    // plan-changing commit that does not regenerate it leaves it stale
+    val recorded = scala.io.Source.fromFile("PLANS.md", "UTF-8").getLines()
+      .filter(_.startsWith("| `")).map(l => l.split('`')(1) -> l).toMap
+    val stale = census.collect { case (name, _, _, row) if !recorded.get(name).contains(row) =>
+      s"  code:     $row\n  PLANS.md: ${recorded.getOrElse(name, "(no row)")}" }
+    val gone = (recorded.keySet -- census.map(_._1)).toSeq.sorted.map(n => s"  PLANS.md only: $n")
+    assert(stale.isEmpty && gone.isEmpty,
+      s"PLANS.md is stale; regenerate it with `sbt \"runMain graft.PlanAudit\"`:\n" +
+        (stale ++ gone).mkString("\n"))
+  }
 
   test("no array/map/struct/binary/decimal columns in registered outputs") {
     // Driver-harness constraints (round 1, VERDICT.md "What's wrong" #1/#2):
@@ -93,7 +108,7 @@ class ContractSpec extends AnyFunSuite {
     // trailing zeros that DuckDB's float64 conversion drops — both fail the
     // stringify-then-hash compare even on identical values. Finals must be
     // scalar, and money finals must be DOUBLE (Det.dsum2/4, .cast(DoubleType)).
-    val offenders = census.flatMap { case (name, schema, _) =>
+    val offenders = census.flatMap { case (name, schema, _, _) =>
       // a frame that cannot be built fails this test with its own error
       schema.fold(e => throw e, identity).fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] || f.dataType.isInstanceOf[MapType] ||
@@ -113,7 +128,7 @@ class ContractSpec extends AnyFunSuite {
     // join_anti is legitimately empty (every customer has orders) — its
     // ORACLE is empty too, so the hash match still passes.
     val mayBeEmpty = Set("join_anti", "set_except")
-    val failures = census.flatMap { case (name, _, rows) =>
+    val failures = census.flatMap { case (name, _, rows, _) =>
       rows match {
         case Right(n) =>
           if (n == 0 && !mayBeEmpty.contains(name)) Some(s"$name: empty") else None

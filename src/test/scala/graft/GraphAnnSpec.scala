@@ -214,6 +214,26 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(engineRecall >= 0.90, f"engine beam recall $engineRecall%.3f below the measured floor")
   }
 
+  test("repeated beam searches keep one round spill each, and the last frame still reads") {
+    // Rounds deletes each beam round's spill once the next one is written,
+    // so a search leaves only the spill behind the frame it returns (it
+    // used to leave its round-0 spill plus one per fused round: up to
+    // BeamRounds / BeamFuse + 1 directories per call)
+    GraphAnnIndex.ensure(spark, d)
+    val search = GraphAnnIndex.queries("sim_ann_graph_search")
+    var spills = TestSpark.roundSpills("beam").size
+    val frames = (1 to 3).map { i =>
+      val df = search(spark, d)
+      val now = TestSpark.roundSpills("beam").size
+      assert(now - spills == 1, s"search call $i left ${now - spills} beam round spills")
+      spills = now
+      df
+    }
+    val first = frames.head.collect().toSeq
+    assert(first.nonEmpty && frames.last.collect().toSeq == first,
+      "the frame returned by the last search no longer reads its answer")
+  }
+
   test("novel-query beam search: out-of-index queries reach the measured recall floor") {
     // round 18: the production serving shape — the query batch is NOT a
     // slice of the index (reversed embeddings: a pure permutation, and a

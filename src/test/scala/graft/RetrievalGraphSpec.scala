@@ -316,13 +316,12 @@ class RetrievalGraphSpec extends AnyFunSuite {
   test("kcore local regime equals the distributed peel loop") {
     // the round-15 two-regime gate: the driver-side peel (default on the
     // fixture's small graph) must match the distributed spill loop
-    // row-for-row under -Dgraft.cc.forceLoop
+    // row-for-row under spark.graft.regime=loop
     val local = q("graph_kcore").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    System.setProperty("graft.cc.forceLoop", "true")
-    val loop =
-      try q("graph_kcore").collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-      finally System.clearProperty("graft.cc.forceLoop")
+    val loop = TestSpark.withRegime(spark, "loop", "kcore") {
+      q("graph_kcore").collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
     assert(local == loop, s"kcore regimes disagree:\n local=$local\n loop=$loop")
   }
 
@@ -357,10 +356,9 @@ class RetrievalGraphSpec extends AnyFunSuite {
     assert(got.values.exists(_ == 0L) && got.values.exists(_ > 0L))
     // regime equality: the driver BFS (default on this fixture) must match
     // the distributed fixed-round relaxation row-for-row
-    System.setProperty("graft.cc.forceLoop", "true")
-    val loop =
-      try q("graph_bfs_distance").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally System.clearProperty("graft.cc.forceLoop")
+    val loop = TestSpark.withRegime(spark, "loop", "bfs") {
+      q("graph_bfs_distance").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(loop == got, "bfs regimes disagree")
   }
 

@@ -37,6 +37,29 @@ object TestSpark {
     roots(df.queryExecution.executedPlan).distinct
   }
 
+  /** Names of the spill directories under the engine's process dir whose
+    * name is `<prefix>_r<steps>_<seq>`: the ones [[Rounds]] writes.
+    */
+  def roundSpills(prefix: String): Set[String] =
+    Option(new java.io.File(s"${Sources.procDir}/unique").list()).toSet.flatten
+      .filter(_.matches(s"${prefix}_r\\d+_\\d+"))
+
+  /** Runs `f` with the session conf `spark.graft.regime` set to `regime`,
+    * and unsets it after. Under `loop` it also proves that the forced
+    * loop ran: `f` must leave a new spill of the [[Rounds]] loop named
+    * `loop`. Without that check, a misread key would compare the local
+    * regime with itself, and every "local == loop" spec would still pass.
+    */
+  def withRegime[T](s: SparkSession, regime: String, loop: String)(f: => T): T = {
+    val before = roundSpills(loop)
+    s.conf.set(Regime.Key, regime)
+    val out = try f finally s.conf.unset(Regime.Key)
+    if (regime == "loop")
+      org.scalatest.Assertions.assert((roundSpills(loop) -- before).nonEmpty,
+        s"${Regime.Key}=loop ran no `$loop` round")
+    out
+  }
+
   /** The engine's session ([[GraftSession]]) on 8 cores. Its overrides keep
     * the Derby metastore and the warehouse out of the working directory.
     * The warehouse dir is a static conf; the builder reads it from the

@@ -556,10 +556,8 @@ class TextSimilaritySpec extends AnyFunSuite {
     * the path under test (the fixture graphs are far below CcLocalEdgeCap
     * and would otherwise exercise only the driver union-find).
     */
-  private def withForceLoop[T](f: => T): T = {
-    System.setProperty("graft.cc.forceLoop", "true")
-    try f finally System.clearProperty("graft.cc.forceLoop")
-  }
+  private def withForceLoop[T](f: => T): T =
+    TestSpark.withRegime(spark, "loop", "cc_labels")(f)
 
   test("label propagation converges on a 15-hop chain (no premature round cap)") {
     // min-label propagation needs O(diameter) rounds; a path graph is the
@@ -592,10 +590,10 @@ class TextSimilaritySpec extends AnyFunSuite {
         (0L until 14L).map(i => (i + n.toLong, i + n.toLong + 1))).toSeq // plus a chain
       val docs = (0L until (n + 20L)).toDF("doc_id")
       val pairs = edges.toDF("da", "db")
-      val local = Similarity.labelPropagate(docs, pairs, s"uf_$trial").collect()
+      val local = Similarity.labelPropagate(docs, pairs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       val loop = withForceLoop {
-        Similarity.labelPropagate(docs, pairs, s"uf_loop_$trial").collect()
+        Similarity.labelPropagate(docs, pairs).collect()
       }.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       assert(local == loop, s"trial $trial: regimes disagree\n local=$local\n loop=$loop")
     }
@@ -611,7 +609,7 @@ class TextSimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0L until 20L).toDF("doc_id")
     val chain = (0L until 15L).map(i => (i, i + 1)).toDF("da", "db")
-    val df = withForceLoop { Similarity.labelPropagate(docs, chain, "spec_rerun") }
+    val df = withForceLoop { Similarity.labelPropagate(docs, chain) }
     val first = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val second = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(first == second)
